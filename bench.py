@@ -197,8 +197,10 @@ def cosine_topk_80k(spark):
     sequential IEEE association, so the output — including every double
     cos value — is bit-identical to similarity_topk(quantized=False),
     pinned by tools/probe_cosine_double_ab.py (500/500 rows equal at this
-    exact shape) and tests/test_udfs_and_lsh.py.  The small cosine_topk
-    row above stays on the expression path as the reference rung."""
+    exact shape) and tests/test_sketches.py::
+    test_cosine_topk_routed_double_bit_identical_to_expression.  The small
+    cosine_topk row above stays on the expression path as the reference
+    rung."""
     from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
         cosine_topk_routed_double,
     )
@@ -210,11 +212,10 @@ def cosine_topk_80k(spark):
 
 def cosine_topk_80k_vec(spark):
     """Routed-cogroup brute twin of cosine_topk_80k (quantized; gate- and
-    test-proven bit-identical to the expression path AND the old
-    driver-collect vectorized twin): hash-blocked targets × block-
-    replicated queries, one int64 matmul per block — NO driver collect on
-    either side (VERDICT r7 #2; the collect-based cosine_topk_vectorized
-    stays as the guarded |Q|≪|T| audit tier)."""
+    test-proven bit-identical to the expression path): hash-blocked
+    targets × block-replicated queries, one int64 matmul per block — NO
+    driver collect on either side (VERDICT r7 #2).  The collect-based
+    cosine_topk_vectorized tier that preceded it has been removed."""
     from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
         cosine_topk_routed,
     )

@@ -839,12 +839,13 @@ def _register_similarity_topk_vectorized():
 
     @register("similarity_topk_vectorized", oracle=ORACLES["similarity_topk"])
     def similarity_topk_vectorized_q(spark, sf_dir):
-        """Arrow-batched numpy brute-force cosine top-k (operators/
-        similarity.py cosine_topk_vectorized) on the identical workload and
-        oracle as similarity_topk — the gate pins bit-identity between the
-        interpreted higher-order-function path and the vectorized matmul
-        path (quantized ints + one IEEE-shaped float division each)."""
-        from ..operators.similarity import cosine_topk_vectorized
+        """Numpy brute-force cosine top-k (operators/similarity.py
+        cosine_topk_routed at its default block count — the shuffle
+        parallelism) on the identical workload and oracle as similarity_topk
+        — the gate pins bit-identity between the interpreted
+        higher-order-function path and the vectorized matmul path
+        (quantized ints + one IEEE-shaped float division each)."""
+        from ..operators.similarity import cosine_topk_routed
 
         em = (
             _t(spark, sf_dir, "embeddings")
@@ -852,7 +853,7 @@ def _register_similarity_topk_vectorized():
             .select("vec_id", "embedding")
         )
         q = em.filter(F.col("vec_id") < 10)
-        out = cosine_topk_vectorized(q, em, k=5)
+        out = cosine_topk_routed(q, em, k=5)
         return out.select("q_id", "t_id", "cos", F.col("rnk").cast("long").alias("rnk"))
 
 
@@ -860,8 +861,8 @@ _register_similarity_topk_vectorized()
 
 
 def _register_similarity_topk_routed():
-    # same oracle a third time: expression path, driver-collect vectorized
-    # twin, and the fully-routed cogroup all pin to one SQL contract
+    # same oracle a third time: the expression path and the routed cogroup
+    # at two block counts all pin to one SQL contract
     from . import ORACLES
 
     @register("similarity_topk_routed", oracle=ORACLES["similarity_topk"])
@@ -871,8 +872,8 @@ def _register_similarity_topk_routed():
         cogrouped with block-replicated queries — ZERO driver collect on
         either side, the production serving shape of the brute tier
         (VERDICT r7 #2).  Same workload and oracle as similarity_topk /
-        similarity_topk_vectorized, so the gate pins all three forms to
-        one SQL contract."""
+        similarity_topk_vectorized (8 blocks here, the default count
+        there), so the gate pins all three to one SQL contract."""
         from ..operators.similarity import cosine_topk_routed
 
         em = (

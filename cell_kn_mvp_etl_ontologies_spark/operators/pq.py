@@ -690,12 +690,11 @@ def ivf_pq_topk_routed(
     ``index_codes`` is the offline artifact ``stream_ivf_pq_maintain``
     maintains and the batch build produces: (cell, t_id, codes ARRAY<INT>)
     — the prebuilt (corpus_cells ⨝ codes) pair in one frame, partitionable
-    by cell.  Per cell the task computes each probing query's ADC lookup
-    table (m·ksub int64 squared-L2 entries — KBs), gathers each member's m
-    codes through it, and emits a local top-k under the final total order
-    (adc ASC, t_id ASC); a global window refines (each t_id lives in
-    exactly one cell, so per-cell candidates are duplicate-free and the
-    union-of-local-top-k property holds per query).
+    by cell.  Scoring is ``similarity._cogroup_topk`` over ``adc_plane``:
+    per cell the task computes each probing query's ADC lookup table
+    (m·ksub int64 squared-L2 entries — KBs) and gathers each member's m
+    codes through it; the kernel keeps a local top-k under the final
+    total order (adc ASC, t_id ASC) and a global window refines.
 
     Exactness: queries quantize via the expression path (``quantize_vec``,
     ONE rounding mode in play), LUT entries and sums are int64 — so the
@@ -709,9 +708,8 @@ def ivf_pq_topk_routed(
     measured doctrine of SCALE.md §hot-cell; mitigation is k_cells at
     build time."""
     import numpy as np
-    import pyarrow as pa
 
-    from .similarity import ivf_assign_vectorized
+    from .similarity import _cogroup_topk, _pa_list_matrix, ivf_assign_vectorized
 
     crows = codebooks.select("sub", "cell", "cv").collect()
     from .guards import check_driver_bound
@@ -749,27 +747,9 @@ def ivf_pq_topk_routed(
     routed = probe.join(F.broadcast(q), on="q_id").select("cell", "q_id", "q_vec")
     members = index_codes.select("cell", "t_id", "codes")
 
-    empty = pa.table(
-        {
-            "q_id": pa.array([], pa.int64()),
-            "t_id": pa.array([], pa.int64()),
-            "adc_dist": pa.array([], pa.int64()),
-        }
-    )
-
-    # Arrow-native cogroup scorer (round 15 — the same §4.2 boundary fix as
-    # _block_cogroup_scorer_arrow): the codes and q_vec list columns cross
-    # the Python boundary as flat buffers (_pa_list_matrix) instead of being
-    # boxed into object-dtype pandas columns one numpy array per row.  The
-    # numpy core below is byte-for-byte the pandas twin's (searchsorted code
-    # verify, per-subspace broadcast-subtract LUTs, grouped_topk_indices),
-    # so results stay bit-identical to ivf_pq_topk.
-    def score(mem: "pa.Table", qs: "pa.Table") -> "pa.Table":
-        if mem.num_rows == 0 or qs.num_rows == 0:
-            return empty
-        from .similarity import _pa_list_matrix
-
-        t_ids = mem.column("t_id").to_numpy()
+    def adc_plane(mem: "pa.Table", qs: "pa.Table"):
+        """(n_t, n_q) int64 ADC distances: every probing query's LUT per
+        subspace in one broadcast subtract, one gather per subspace."""
         codes = _pa_list_matrix(mem.column("codes"), np).astype(np.int64)  # (n_t, m)
         if codes.shape[1] != m:
             raise ValueError(f"ivf_pq_topk_routed: codes width {codes.shape[1]} != m={m}")
@@ -787,41 +767,15 @@ def ivf_pq_topk_routed(
                     "is not a codebook cell"
                 )
             code_idx[:, s] = idx
-        q_ids = qs.column("q_id").to_numpy()
         Q = _pa_list_matrix(qs.column("q_vec"), np)
-        # members pre-sorted by t_id so the vectorized top-k's stable
-        # argsort replays the (adc ASC, t_id ASC) lexsort tie order
-        # (round 14 — the old shape looped queries in Python, building
-        # each LUT m times per query and lexsorting per query)
-        ord_t = np.argsort(t_ids, kind="stable")
-        t_ids = t_ids[ord_t]
-        code_idx = code_idx[ord_t]
-        # all queries' LUTs per subspace in one broadcast subtract
-        # (int64 elementwise — exact), one fancy-index gather per subspace
-        adc = np.zeros((t_ids.size, q_ids.size), dtype=np.int64)
+        adc = np.zeros((codes.shape[0], Q.shape[0]), dtype=np.int64)
         for s in range(m):
             qsub = Q[:, s * subdim:(s + 1) * subdim]            # (n_q, subdim)
             diff = qsub[:, None, :] - C[s][None, :, :]          # (n_q, ksub, subdim)
             lut = np.einsum("qkd,qkd->qk", diff, diff)          # (n_q, ksub)
             adc += lut[:, code_idx[:, s]].T                     # (n_t, n_q)
-        from .similarity import grouped_topk_indices
+        return adc
 
-        q_idx, t_row = grouped_topk_indices(adc, t_ids, q_ids, k)
-        if q_idx.size == 0:
-            return empty
-        return pa.table(
-            {
-                "q_id": q_ids[q_idx],
-                "t_id": t_ids[t_row],
-                "adc_dist": adc[t_row, q_idx],
-            }
-        )
-
-    cand = (
-        members.groupBy("cell")
-        .cogroup(routed.groupBy("cell"))
-        .applyInArrow(score, "q_id long, t_id long, adc_dist long")
-    )
-    return window_rank_topk(
-        cand, ["q_id"], [F.col("adc_dist").asc(), F.col("t_id").asc()], k, rank_col="rnk"
+    return _cogroup_topk(
+        members, routed, adc_plane, k, value="adc_dist", value_type="long", desc=False
     )

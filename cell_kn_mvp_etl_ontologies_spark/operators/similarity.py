@@ -79,10 +79,6 @@ def sq_dist_long(a: Column, b: Column) -> Column:
     )
 
 
-def with_norm_sq(df: DataFrame, vec_col: str, out_col: str = "norm_sq") -> Column:
-    return df.withColumn(out_col, _dot_long(F.col(vec_col), F.col(vec_col)))
-
-
 def cosine_join_quantized(
     queries: DataFrame, targets: DataFrame, scale: int = 1000
 ) -> DataFrame:
@@ -521,221 +517,6 @@ def hyperplane_lsh_bucket(df: DataFrame, vec_col: str, n_planes: int = 16, seed:
     return df.withColumn("lsh_bucket", bucket)
 
 
-def cosine_topk_vectorized(
-    queries: DataFrame,
-    targets: DataFrame,
-    k: int,
-    scale: int = 1000,
-    max_queries: int = 20_000,
-) -> DataFrame:
-    """Arrow-batched numpy twin of ``similarity_topk(quantized=True)`` —
-    bit-identical results, vectorized hot loop.
-
-    The expression path's per-row ``zip_with``+``aggregate`` dot product is
-    a higher-order function, which Spark evaluates INTERPRETED (no codegen)
-    — the same finding that drove the bloom filter's hash-family choice.
-    Here the fix is the sanctioned vectorized-UDF path: the query matrix is
-    collected and quantized driver-side (|Q| << |T| is this operator's
-    contract — Q-scale, not data-scale, like the materialized bloom words),
-    and each Arrow batch of targets scores as ONE int64 matmul.
-
-    Exactness argument, step by step:
-      - quantization: both paths compute HALF_UP round(float64(x) * scale) —
-        ``quantize_np`` replicates Spark's half-away-from-zero rounding
-        exactly (dyadic values like 0.0625 land on .5 after scaling, where
-        np.rint's half-even would diverge);
-      - dot/norms: int64 arithmetic, exact and associative — matmul order
-        cannot matter;
-      - cosine: one float64 multiply + sqrt + divide, the same IEEE ops in
-        the same shape as the JVM expression — bit-identical doubles.
-
-    Each batch emits only its LOCAL top-k per query under the exact final
-    total order (cos DESC, t_id ASC), so candidates are n_batches*|Q|*k
-    rows — the per-partition-heap shape of TakeOrderedAndProject — and the
-    global window top-k over them equals the true top-k (union-of-local-
-    top-k property of total orders).
-
-    Zero-norm vectors: Spark's non-ANSI double division yields NULL for
-    0/0 (not IEEE NaN) and the DESC window orders nulls LAST; the numpy
-    side produces NaN, which ``-col``-keyed lexsort also orders last and
-    which the pandas→Arrow hop delivers back to Spark as NULL — so both
-    paths exclude zero-norm rows from any top-k that has k valid
-    candidates, and emit them trailing otherwise (pinned by test).  Under
-    ANSI the expression path raises DIVIDE_BY_ZERO instead: zero-norm
-    input is invalid there by construction.
-
-    Exceeding the |Q| contract raises :class:`guards.DriverBoundExceeded`
-    BEFORE the collect (one cheap count job) — the audit tier fails
-    loudly instead of degrading into a driver bottleneck; the unbounded
-    serving shape is ``cosine_topk_routed``.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from .guards import check_driver_bound
-
-    check_driver_bound(
-        queries.count(),
-        max_queries,
-        "cosine_topk_vectorized (query-side driver collect)",
-        "cosine_topk_routed (cogrouped, zero driver collect)",
-    )
-    qrows = queries.select("vec_id", "embedding").collect()
-    q_ids = np.array([r.vec_id for r in qrows], dtype=np.int64)
-    Q = quantize_np(np.array([r.embedding for r in qrows], dtype=np.float64), scale)
-    q_norm = (Q * Q).sum(axis=1)
-
-    def score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            t_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            T = quantize_np(np.stack(pdf["embedding"].to_numpy()), scale)
-            t_norm = (T * T).sum(axis=1)
-            dots = T @ Q.T
-            # same IEEE shape as the expression path: double(dot) /
-            # sqrt(double(nq) * double(nt))
-            cos = dots.astype(np.float64) / np.sqrt(
-                q_norm[None, :].astype(np.float64) * t_norm[:, None].astype(np.float64)
-            )
-            out_q, out_t, out_c = [], [], []
-            for j, qid in enumerate(q_ids):
-                idx = np.nonzero(t_ids != qid)[0]
-                if idx.size == 0:
-                    continue
-                col = cos[idx, j]
-                order = np.lexsort((t_ids[idx], -col))[:k]
-                sel = idx[order]
-                out_q.append(np.full(sel.size, qid, dtype=np.int64))
-                out_t.append(t_ids[sel])
-                out_c.append(cos[sel, j])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "q_id": np.concatenate(out_q),
-                        "t_id": np.concatenate(out_t),
-                        "cos": np.concatenate(out_c),
-                    }
-                )
-
-    cand = targets.select("vec_id", "embedding").mapInPandas(
-        score, "q_id long, t_id long, cos double"
-    )
-    return window_rank_topk(
-        cand, ["q_id"], [F.col("cos").desc(), F.col("t_id").asc()], k, rank_col="rnk"
-    )
-
-
-def ivf_topk_prebuilt_vectorized(
-    queries: DataFrame,
-    index: DataFrame,
-    centroids: DataFrame,
-    k: int,
-    nprobe: int = 2,
-    scale: int = 1000,
-) -> DataFrame:
-    """Vectorized serving path over a ``build_ivf_index`` frame —
-    bit-identical to ``ivf_topk_prebuilt``, with the per-candidate HOF dot
-    replaced by per-cell numpy matmuls.
-
-    Shape: probe assignment is unchanged (broadcast-centroid map over the
-    query batch); the probed cell→queries routing table and the quantized
-    query matrix are collected driver-side (both Q-scale); the index is
-    FILTERED to probed cells (partition-pruned when the index is stored
-    partitioned/bucketed by cell) and each Arrow batch scores its members
-    against exactly the queries probing their cells — index vectors cross
-    into Python ONCE, already quantized, and each (batch, cell) group emits
-    only its local top-k per query under the final total order before the
-    global window refine.  Same exactness argument as
-    cosine_topk_vectorized (int64 dots, one IEEE-shaped division).
-    Honest measurement (80k corpus, 64 cells, nprobe=8, local[32]): 1.34 s
-    vs the expression path's 1.23 s — PARITY, not a win.  After IVF's 8x
-    candidate pruning the scoring volume (~500k pairs) is small enough that
-    probe assignment, Python worker startup, and the Arrow hop of the index
-    vectors offset the interpreted-HOF savings that gave the brute-force
-    twin its 2.4-3x.  Use this variant when cells are large (bigger corpora,
-    fewer cells, higher nprobe) — the matmul advantage grows linearly with
-    pairs-per-cell while the overheads stay fixed; below that regime the
-    expression path is already the right choice.
-
-    Exceeding the |Q| contract raises :class:`guards.DriverBoundExceeded`
-    before the collect; the unbounded serving shape is
-    ``ivf_topk_prebuilt_routed``."""
-    import numpy as np
-    import pandas as pd
-
-    from .guards import check_driver_bound
-
-    check_driver_bound(
-        queries.count(),
-        20_000,
-        "ivf_topk_prebuilt_vectorized (query-side driver collect)",
-        "ivf_topk_prebuilt_routed (cogrouped, zero driver collect)",
-    )
-    probe = ivf_assign(queries, centroids, nprobe=nprobe, scale=scale).select(
-        F.col("vec_id").alias("q_id"), "cell"
-    )
-    qrows = queries.select("vec_id", "embedding").collect()
-    q_index = {int(r.vec_id): i for i, r in enumerate(qrows)}
-    # HALF_UP, same as quantize_vec: ivf_assign quantizes these queries
-    # half-up for probe assignment and the index's t_vec is half-up — one
-    # query vector must never be quantized two different ways (ADVICE r4).
-    Q = quantize_np(np.array([r.embedding for r in qrows], dtype=np.float64), scale)
-    q_ids_arr = np.array([r.vec_id for r in qrows], dtype=np.int64)
-    q_norm = (Q * Q).sum(axis=1)
-    cell_to_q: dict[int, list[int]] = {}
-    for r in probe.collect():
-        cell_to_q.setdefault(int(r.cell), []).append(q_index[int(r.q_id)])
-    probed_cells = sorted(cell_to_q)
-
-    members = index.filter(F.col("cell").isin(probed_cells)).select(
-        "cell", "t_id", "t_vec", "t_norm"
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            cells = pdf["cell"].to_numpy()
-            for cell in np.unique(cells):
-                qs = cell_to_q.get(int(cell))
-                if not qs:
-                    continue
-                sub = pdf[cells == cell]
-                t_ids = sub["t_id"].to_numpy(dtype=np.int64)
-                T = np.stack(sub["t_vec"].to_numpy()).astype(np.int64)
-                t_norm = sub["t_norm"].to_numpy(dtype=np.int64)
-                Qc, qn, qi = Q[qs], q_norm[qs], q_ids_arr[qs]
-                dots = T @ Qc.T
-                cos = dots.astype(np.float64) / np.sqrt(
-                    qn[None, :].astype(np.float64) * t_norm[:, None].astype(np.float64)
-                )
-                out_q, out_t, out_c = [], [], []
-                for j, qid in enumerate(qi):
-                    idx = np.nonzero(t_ids != qid)[0]
-                    if idx.size == 0:
-                        continue
-                    col = cos[idx, j]
-                    order = np.lexsort((t_ids[idx], -col))[:k]
-                    sel = idx[order]
-                    out_q.append(np.full(sel.size, qid, dtype=np.int64))
-                    out_t.append(t_ids[sel])
-                    out_c.append(cos[sel, j])
-                if out_q:
-                    yield pd.DataFrame(
-                        {
-                            "q_id": np.concatenate(out_q),
-                            "t_id": np.concatenate(out_t),
-                            "cos": np.concatenate(out_c),
-                        }
-                    )
-
-    cand = members.mapInPandas(score, "q_id long, t_id long, cos double")
-    return window_rank_topk(
-        cand, ["q_id"], [F.col("cos").desc(), F.col("t_id").asc()], k, rank_col="rnk"
-    )
-
-
 def ivf_topk_prebuilt_routed(
     queries: DataFrame,
     index: DataFrame,
@@ -746,23 +527,18 @@ def ivf_topk_prebuilt_routed(
 ) -> DataFrame:
     """Fully-distributed vectorized IVF serving — NO driver collect of the
     query side (VERDICT r4 #2).  Bit-identical to ``ivf_topk_prebuilt``.
-
-    The collect-based twin (``ivf_topk_prebuilt_vectorized``) ships the
-    query matrix through the driver, a hop that stops scaling around
-    |Q|~10k.  Here queries stay a DataFrame end-to-end:
+    Queries stay a DataFrame end-to-end:
 
       1. probe assignment (broadcast-centroid map, unchanged) produces the
          (q_id, cell) routing table as a DataFrame;
       2. queries are quantized ONCE via the expression path
          (``quantize_vec`` — so there is exactly one rounding mode in play)
          and joined to their probed cells: (cell, q_id, q_vec, q_norm);
-      3. a cogrouped ``applyInPandas`` on cell brings each cell's index
-         members and its probing queries together on the EXECUTOR — one
-         int64 matmul per cell, local top-k per query under the final total
-         order (cos DESC, t_id ASC);
-      4. a global window top-k refines the per-cell candidates (each t_id
-         lives in exactly one cell, so candidates are duplicate-free and
-         the union-of-local-top-k property applies per query).
+      3. ``_cogroup_topk`` brings each cell's index members and its probing
+         queries together on the EXECUTOR — one int64 matmul per cell
+         (``_int_cosine_plane``), local top-k per query under the final
+         total order (cos DESC, t_id ASC), then the global window refine.
+         A zero-norm query or member raises ValueError naming its vec_id.
 
     Shuffle shape: one exchange of the routed queries + one of the index on
     cell (the second is free when the index was written
@@ -793,15 +569,7 @@ def ivf_topk_prebuilt_routed(
         "cell", "q_id", "q_vec", "q_norm"
     )
     members = index.select("cell", "t_id", "t_vec", "t_norm")
-
-    cand = (
-        members.groupBy("cell")
-        .cogroup(routed.groupBy("cell"))
-        .applyInArrow(_block_cogroup_scorer_arrow(k), "q_id long, t_id long, cos double")
-    )
-    return window_rank_topk(
-        cand, ["q_id"], [F.col("cos").desc(), F.col("t_id").asc()], k, rank_col="rnk"
-    )
+    return _cogroup_topk(members, routed, _int_cosine_plane, k)
 
 
 def exact_int_matmul(A, B):
@@ -828,7 +596,7 @@ def exact_int_matmul(A, B):
 
 
 def grouped_topk_indices(key, t_ids_sorted, q_ids, k: int):
-    """Vectorized per-query top-k used by the cogrouped scorers: for each
+    """Vectorized per-query top-k of ``_cogroup_topk``: for each
     column j of ``key`` (shape (n_t, n_q)), select the k smallest entries
     ASCENDING with NaN last and ties broken by row order — callers pass
     rows pre-sorted by t_id ASC, so a stable argsort reproduces the
@@ -857,10 +625,9 @@ def _pa_list_matrix(col, np):
     """(n, d) matrix from a pyarrow primitive-list column (int64, int32,
     float64, …) in ONE flat copy: the list column's value buffer is a
     single contiguous array, so ``flatten().to_numpy()`` + a reshape
-    replaces the pandas path's per-row object boxing (one numpy array
-    allocated per row) and the O(n) ``np.stack`` gather.  Dtype follows
-    the Arrow value type.  Rejects nulls and ragged widths loudly (the
-    pandas twin's ``np.stack`` would have raised on both)."""
+    avoids per-row object boxing (one numpy array allocated per row) and
+    an O(n) ``np.stack`` gather.  Dtype follows the Arrow value type.
+    Rejects nulls and ragged widths loudly."""
     arr = col.combine_chunks()
     if arr.null_count:
         raise ValueError("NULL vector in cogroup scorer input")
@@ -873,110 +640,115 @@ def _pa_list_matrix(col, np):
     return flat.reshape(-1, d)
 
 
-def _block_cogroup_scorer_arrow(k: int):
-    """Arrow-native twin of ``_block_cogroup_scorer`` (the round-14 §4.2
-    boundary fix): the cogrouped scorer receives ``pyarrow.Table`` pairs
-    directly (``applyInArrow``), so the vector columns cross the boundary
-    as flat int64 buffers instead of being boxed into object-dtype pandas
-    columns row by row — the boxing was the measured residual wall of the
-    routed rows after the compute itself was vectorized.  The numpy core
-    (exact_int_matmul → IEEE cosine division → grouped_topk_indices) is
-    byte-for-byte the pandas twin's; only input extraction and output
-    construction change, so results are bit-identical (pinned by
-    tools/verify_routed_ann.py and the interleaved A/B probe)."""
+def _cogroup_topk(
+    members: DataFrame,
+    routed: DataFrame,
+    plane,
+    k: int,
+    value: str = "cos",
+    value_type: str = "double",
+    desc: bool = True,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """THE routed scorer of the similarity ladder: every cogroup rung
+    (brute cosine int/double, IVF, IVF-PQ, MaxSim) is this kernel plus a
+    *plane* function.
+
+    ``members`` (cell, t_id, …) and ``routed`` (cell, q_id, …) cogroup on
+    cell as ``pyarrow.Table`` pairs (``applyInArrow`` — list columns cross
+    the boundary as flat buffers, never boxed per row).  Per cell the
+    kernel stably sorts the members by t_id, asks ``plane(mem, qs)`` for
+    the (n_t, n_q) score matrix, and keeps each query's local top-k
+    (self excluded) under the final total order — ``value`` DESC or ASC,
+    then t_id ASC — through ``grouped_topk_indices``; the stable sort is
+    what makes its argsort replay the t_id tie-break.  A global window
+    top-k refines the per-cell candidates: each t_id lives in exactly one
+    cell, so candidates are duplicate-free and the union of local top-ks
+    holds the true top-k.  ``carry`` names int64 query-side columns
+    copied onto each output row."""
     import numpy as np
     import pyarrow as pa
 
-    empty = pa.table(
-        {
-            "q_id": pa.array([], pa.int64()),
-            "t_id": pa.array([], pa.int64()),
-            "cos": pa.array([], pa.float64()),
-        }
+    value_pa = pa.float64() if value_type == "double" else pa.int64()
+    schema = pa.schema(
+        [("q_id", pa.int64()), ("t_id", pa.int64()), (value, value_pa)]
+        + [(c, pa.int64()) for c in carry]
     )
 
     def score(mem: "pa.Table", qs: "pa.Table") -> "pa.Table":
         if mem.num_rows == 0 or qs.num_rows == 0:
-            return empty
+            return schema.empty_table()
+        mem = mem.take(np.argsort(mem.column("t_id").to_numpy(), kind="stable"))
         t_ids = mem.column("t_id").to_numpy()
-        ord_t = np.argsort(t_ids, kind="stable")
-        t_ids = t_ids[ord_t]
-        T = _pa_list_matrix(mem.column("t_vec"), np)[ord_t]
-        t_norm = mem.column("t_norm").to_numpy()[ord_t]
         q_ids = qs.column("q_id").to_numpy()
-        Q = _pa_list_matrix(qs.column("q_vec"), np)
-        q_norm = qs.column("q_norm").to_numpy()
-        dots = exact_int_matmul(T, Q.T)
-        cos = dots / np.sqrt(
-            q_norm[None, :].astype(np.float64) * t_norm[:, None].astype(np.float64)
-        )
-        q_idx, t_row = grouped_topk_indices(-cos, t_ids, q_ids, k)
-        if q_idx.size == 0:
-            return empty
-        return pa.table(
-            {"q_id": q_ids[q_idx], "t_id": t_ids[t_row], "cos": cos[t_row, q_idx]}
-        )
+        vals = plane(mem, qs)
+        q_idx, t_row = grouped_topk_indices(-vals if desc else vals, t_ids, q_ids, k)
+        out = {"q_id": q_ids[q_idx], "t_id": t_ids[t_row], value: vals[t_row, q_idx]}
+        for c in carry:
+            out[c] = qs.column(c).to_numpy()[q_idx]
+        return pa.table(out, schema=schema)
 
-    return score
+    ddl = ", ".join(
+        [f"q_id long, t_id long, {value} {value_type}"] + [f"{c} long" for c in carry]
+    )
+    cand = members.groupBy("cell").cogroup(routed.groupBy("cell")).applyInArrow(score, ddl)
+    order = F.col(value).desc() if desc else F.col(value).asc()
+    return window_rank_topk(cand, ["q_id"], [order, F.col("t_id").asc()], k, rank_col="rnk")
 
 
-def _block_cogroup_scorer(k: int):
-    """Pandas form of the cogrouped (members, queries) → local-top-k
-    scorer.  Production consumers (``ivf_topk_prebuilt_routed``,
-    ``cosine_topk_routed``) now run the Arrow twin above
-    (``_block_cogroup_scorer_arrow`` — identical numpy core, no pandas
-    boxing of the vector columns); this form is kept as the A/B reference
-    used by tools/probe_scorer_vec_ab.py and the bit-identity pins.
-    Per cell/block group: one int64 matmul, one IEEE-shaped cosine
-    division (double(dot) / sqrt(double·double) — the exact
-    expression-path shape), local top-k per query under the final
-    (cos DESC, t_id ASC) total order."""
+def _nonzero_norms(tbl, id_col: str, norms):
+    """``norms`` unchanged, or ValueError naming the first zero-norm row's
+    id: its cosine is 0/0 = NaN, which the local top-k would rank last
+    but Spark's DESC window ranks FIRST, so it must never reach Spark."""
+    zero = norms == 0
+    if zero.any():
+        bad = int(tbl.column(id_col).to_numpy()[zero][0])
+        raise ValueError(f"zero-norm vector vec_id={bad} in cosine scorer input")
+    return norms
+
+
+def _int_cosine_plane(mem, qs):
+    """Exact-int cosine plane: int64 dots through ``exact_int_matmul``,
+    then the expression path's IEEE shape double(dot) /
+    sqrt(double(q_norm) · double(t_norm)) — bit-identical to
+    ``cosine_join_quantized``."""
     import numpy as np
-    import pandas as pd
 
-    empty = pd.DataFrame(
-        {
-            "q_id": pd.Series(dtype="int64"),
-            "t_id": pd.Series(dtype="int64"),
-            "cos": pd.Series(dtype="float64"),
-        }
+    T = _pa_list_matrix(mem.column("t_vec"), np)
+    Q = _pa_list_matrix(qs.column("q_vec"), np)
+    t_norm = _nonzero_norms(mem, "t_id", mem.column("t_norm").to_numpy())
+    q_norm = _nonzero_norms(qs, "q_id", qs.column("q_norm").to_numpy())
+    return exact_int_matmul(T, Q.T) / np.sqrt(
+        q_norm[None, :].astype(np.float64) * t_norm[:, None].astype(np.float64)
     )
 
-    def score(mem: pd.DataFrame, qs: pd.DataFrame) -> pd.DataFrame:
-        if mem.empty or qs.empty:
-            return empty
-        # members pre-sorted by t_id so grouped_topk_indices' stable
-        # argsort replays the (cos DESC, t_id ASC) lexsort tie order
-        t_ids = mem["t_id"].to_numpy(dtype=np.int64)
-        ord_t = np.argsort(t_ids, kind="stable")
-        t_ids = t_ids[ord_t]
-        T = np.stack(mem["t_vec"].to_numpy()[ord_t]).astype(np.int64)
-        t_norm = mem["t_norm"].to_numpy(dtype=np.int64)[ord_t]
-        q_ids = qs["q_id"].to_numpy(dtype=np.int64)
-        Q = np.stack(qs["q_vec"].to_numpy()).astype(np.int64)
-        q_norm = qs["q_norm"].to_numpy(dtype=np.int64)
-        # exact-by-bound float64 BLAS (round 14 — was a naive int64 matmul);
-        # the division below consumed double(dots) anyway, so values are
-        # IEEE-identical to the old astype path
-        dots = exact_int_matmul(T, Q.T)
-        cos = dots / np.sqrt(
-            q_norm[None, :].astype(np.float64) * t_norm[:, None].astype(np.float64)
-        )
-        # vectorized per-query top-k (round 14 — was a Python loop with one
-        # np.lexsort per query: 80k interpreter iterations at |Q|=10k);
-        # key = -cos gives ASC order == cos DESC, NaN placement unchanged
-        q_idx, t_row = grouped_topk_indices(-cos, t_ids, q_ids, k)
-        if q_idx.size == 0:
-            return empty
-        return pd.DataFrame(
-            {
-                "q_id": q_ids[q_idx],
-                "t_id": t_ids[t_row],
-                "cos": cos[t_row, q_idx],
-            }
-        )
 
-    return score
+def _hash_blocks(
+    queries: DataFrame, targets: DataFrame, n_blocks: int | None, vec, with_norm: bool
+) -> tuple[DataFrame, DataFrame]:
+    """(members, routed) of the brute-force routed rungs: targets split
+    into ``n_blocks`` deterministic hash blocks on vec_id (default: the
+    shuffle parallelism) standing in for trained cells, and every query
+    replicated to every block.  ``vec`` maps the embedding column to the
+    scored vector; ``with_norm`` adds the int64 ‖v‖² columns."""
+    if n_blocks is None:
+        n_blocks = int(queries.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    t = targets.select(
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_blocks)).cast("int").alias("cell"),
+        F.col("vec_id").alias("t_id"),
+        vec(F.col("embedding")).alias("t_vec"),
+    )
+    q = queries.select(F.col("vec_id").alias("q_id"), vec(F.col("embedding")).alias("q_vec"))
+    if with_norm:
+        t = t.withColumn("t_norm", _dot_long(F.col("t_vec"), F.col("t_vec")))
+        q = q.withColumn("q_norm", _dot_long(F.col("q_vec"), F.col("q_vec")))
+    # replicate each query to every block via explode(sequence(..)) — a
+    # pure codegen projection, no join node (the plan auditor's cartesian
+    # check stays meaningful for real accidents)
+    routed = q.select(
+        F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("cell"), *q.columns
+    )
+    return t, routed
 
 
 def cosine_topk_routed(
@@ -988,17 +760,16 @@ def cosine_topk_routed(
 ) -> DataFrame:
     """Brute-force cosine top-k served through the routed cogroup — the
     ``ivf_topk_prebuilt_routed`` serving shape at nprobe = ALL cells,
-    with deterministic hash blocks standing in for trained cells.  This
-    retires the |Q|≪|T| driver collect of ``cosine_topk_vectorized`` from
-    the production/benched path (VERDICT r7 #2 — the same move that fixed
-    r6's ann_pq_rerank breach): queries stay a DataFrame end-to-end.
+    with deterministic hash blocks standing in for trained cells; queries
+    stay a DataFrame end-to-end (no driver collect on either side).
 
-    Bit-identical to ``cosine_topk_vectorized`` / ``similarity_topk
-    (quantized=True)``: ONE quantization mode (expression-side HALF_UP
-    ``quantize_vec`` on both sides), the shared ``_block_cogroup_scorer``
-    (same int64 matmul and IEEE division bytes as the IVF rung), blocks
-    partition the targets so per-block local top-k unions are
-    duplicate-free and the global window refine returns the true top-k.
+    Bit-identical to ``similarity_topk(quantized=True)``: ONE quantization
+    mode (expression-side HALF_UP ``quantize_vec`` on both sides), the
+    shared ``_int_cosine_plane`` (same int64 matmul and IEEE division
+    bytes as the IVF rung), blocks partition the targets so per-block
+    local top-k unions are duplicate-free and the global window refine
+    returns the true top-k.  A zero-norm vector raises ValueError naming
+    its vec_id (its cosine is undefined).
 
     Shuffle shape at 100 TB: one exchange of targets on block (free if
     the corpus is stored bucketed by the same hash), one broadcast of the
@@ -1006,35 +777,10 @@ def cosine_topk_routed(
     executor-side replication, never a driver hop).  Block count defaults
     to shuffle parallelism; raise it to bound per-task matmul memory
     (|block| × |Q| floats)."""
-    spark = queries.sparkSession
-    if n_blocks is None:
-        n_blocks = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    t = targets.select(
-        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_blocks)).cast("int").alias("cell"),
-        F.col("vec_id").alias("t_id"),
-        quantize_vec(F.col("embedding"), scale).alias("t_vec"),
-    ).withColumn("t_norm", _dot_long(F.col("t_vec"), F.col("t_vec")))
-    q = queries.select(
-        F.col("vec_id").alias("q_id"),
-        quantize_vec(F.col("embedding"), scale).alias("q_vec"),
-    ).withColumn("q_norm", _dot_long(F.col("q_vec"), F.col("q_vec")))
-    # replicate each query to every block via explode(sequence(..)) — a
-    # pure codegen projection, no join node (the plan auditor's cartesian
-    # check stays meaningful for real accidents)
-    routed = q.select(
-        F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("cell"),
-        "q_id",
-        "q_vec",
-        "q_norm",
+    t, routed = _hash_blocks(
+        queries, targets, n_blocks, lambda v: quantize_vec(v, scale), with_norm=True
     )
-    cand = (
-        t.groupBy("cell")
-        .cogroup(routed.groupBy("cell"))
-        .applyInArrow(_block_cogroup_scorer_arrow(k), "q_id long, t_id long, cos double")
-    )
-    return window_rank_topk(
-        cand, ["q_id"], [F.col("cos").desc(), F.col("t_id").asc()], k, rank_col="rnk"
-    )
+    return _cogroup_topk(t, routed, _int_cosine_plane, k)
 
 
 def _seq_fold_matmul(T, Q, np):
@@ -1062,50 +808,19 @@ def _seq_fold_norms(V, np):
     return acc
 
 
-def _block_cogroup_scorer_double(k: int):
-    """Arrow cogrouped scorer for the DOUBLE (unquantized) brute-force
-    cosine rung — the ``_block_cogroup_scorer_arrow`` shape with float64
-    vectors and sequential-fold arithmetic.  Dots and norms replay the
-    expression fold's IEEE association exactly (``_seq_fold_matmul`` /
-    ``_seq_fold_norms``), and the division is the identical
-    ``dot / sqrt(q_norm · t_norm)`` shape, so every cos value is
-    bit-identical to ``cosine_join``'s interpreted HOF output — pinned by
-    tools/probe_cosine_double_ab.py at the 80k bench shape and by unit
-    test.  NaN caveat (shared with every routed rung): a zero-norm vector
-    yields NaN cos, which numpy's local top-k places last while Spark's
-    window would place first; callers guarantee nonzero vectors."""
+def _double_cosine_plane(mem, qs):
+    """DOUBLE cosine plane: dots and norms replay the expression fold's
+    sequential IEEE association (``_seq_fold_matmul`` /
+    ``_seq_fold_norms``) and the division is the identical
+    ``dot / sqrt(q_norm · t_norm)``, so every cos is bit-identical to
+    ``cosine_join``'s interpreted HOF output."""
     import numpy as np
-    import pyarrow as pa
 
-    empty = pa.table(
-        {
-            "q_id": pa.array([], pa.int64()),
-            "t_id": pa.array([], pa.int64()),
-            "cos": pa.array([], pa.float64()),
-        }
-    )
-
-    def score(mem: "pa.Table", qs: "pa.Table") -> "pa.Table":
-        if mem.num_rows == 0 or qs.num_rows == 0:
-            return empty
-        t_ids = mem.column("t_id").to_numpy()
-        ord_t = np.argsort(t_ids, kind="stable")
-        t_ids = t_ids[ord_t]
-        T = _pa_list_matrix(mem.column("t_vec"), np)[ord_t]
-        q_ids = qs.column("q_id").to_numpy()
-        Q = _pa_list_matrix(qs.column("q_vec"), np)
-        t_norm = _seq_fold_norms(T, np)
-        q_norm = _seq_fold_norms(Q, np)
-        dots = _seq_fold_matmul(T, Q, np)
-        cos = dots / np.sqrt(q_norm[None, :] * t_norm[:, None])
-        q_idx, t_row = grouped_topk_indices(-cos, t_ids, q_ids, k)
-        if q_idx.size == 0:
-            return empty
-        return pa.table(
-            {"q_id": q_ids[q_idx], "t_id": t_ids[t_row], "cos": cos[t_row, q_idx]}
-        )
-
-    return score
+    T = _pa_list_matrix(mem.column("t_vec"), np)
+    Q = _pa_list_matrix(qs.column("q_vec"), np)
+    t_norm = _nonzero_norms(mem, "t_id", _seq_fold_norms(T, np))
+    q_norm = _nonzero_norms(qs, "q_id", _seq_fold_norms(Q, np))
+    return _seq_fold_matmul(T, Q, np) / np.sqrt(q_norm[None, :] * t_norm[:, None])
 
 
 def cosine_topk_routed_double(
@@ -1118,42 +833,23 @@ def cosine_topk_routed_double(
     the ``cosine_topk_routed`` shape for the unquantized rung (round 15,
     VERDICT r14 #3).  Bit-identical to ``similarity_topk(quantized=False)``:
     vectors cross as float64 (the expression path's cast), dots/norms
-    replay the HOF fold's sequential IEEE association inside the scorer
-    (``_seq_fold_matmul``/``_seq_fold_norms``), the division is the same
+    replay the HOF fold's sequential IEEE association inside the plane
+    (``_double_cosine_plane``), the division is the same
     ``dot / sqrt(q_norm · t_norm)``, and blocks partition the targets so
     the per-block local top-k union + global window refine returns the
-    true top-k under the identical (cos DESC, t_id ASC) total order.
+    true top-k under the identical (cos DESC, t_id ASC) total order.  A
+    zero-norm vector raises ValueError naming its vec_id.
 
     What it removes vs the expression twin: the per-pair interpreted
     ``aggregate ∘ zip_with`` fold of the BroadcastNestedLoopJoin plan —
     |Q|·|T| interpreted 64-dim folds become d vectorized multiply-adds per
     block.  The expression twin stays as the reference rung (bench row
     cosine_topk) pinning bit-identity."""
-    spark = queries.sparkSession
-    if n_blocks is None:
-        n_blocks = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    t = targets.select(
-        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_blocks)).cast("int").alias("cell"),
-        F.col("vec_id").alias("t_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("t_vec"),
+    t, routed = _hash_blocks(
+        queries, targets, n_blocks,
+        lambda v: F.transform(v, lambda x: x.cast("double")), with_norm=False,
     )
-    q = queries.select(
-        F.col("vec_id").alias("q_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("q_vec"),
-    )
-    routed = q.select(
-        F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("cell"),
-        "q_id",
-        "q_vec",
-    )
-    cand = (
-        t.groupBy("cell")
-        .cogroup(routed.groupBy("cell"))
-        .applyInArrow(_block_cogroup_scorer_double(k), "q_id long, t_id long, cos double")
-    )
-    return window_rank_topk(
-        cand, ["q_id"], [F.col("cos").desc(), F.col("t_id").asc()], k, rank_col="rnk"
-    )
+    return _cogroup_topk(t, routed, _double_cosine_plane, k)
 
 
 def maxsim_topk(
@@ -1470,7 +1166,9 @@ def maxsim_topk_routed_vectorized(
     ``ivf_topk_prebuilt_routed`` shape applied to the multi-vector rung,
     and the production hot path: the expression twin's per-token-pair HOF
     dots evaluate interpreted (the documented HOF landmine), while here
-    each cell does ONE int64 numpy matmul per (query, doc) token block.
+    each cell is ``_cogroup_topk`` over ``_maxsim_plane``: ONE stacked
+    token matmul, a segmented max over doc tokens and a segmented sum
+    over query tokens.
 
     Routing is ``maxsim_route_cells`` — the SAME chain as
     ``maxsim_topk_routed``, shared by construction, so the candidate sets
@@ -1500,9 +1198,6 @@ def maxsim_topk_routed_vectorized(
     trained is the low-probe-budget serving choice, not the default.
     Scoring downstream of the cells is byte-identical either way.
     """
-    import numpy as np
-    import pyarrow as pa
-
     if nprobe is None:
         nprobe = n_cells
     if routing == "trained":
@@ -1549,99 +1244,66 @@ def maxsim_topk_routed_vectorized(
     # cogroup — re-alias the grouping column through a fresh exprId on one
     # side so the two children are distinguishable
     q_packed = _pack(q_tokens, "q_id", "q_tok").join(q_cells, "q_id").select(
-        (F.col("cell") + F.lit(0)).alias("cell"), "q_id", "n_toks", "toks"
+        (F.col("cell") + F.lit(0)).alias("cell"),
+        "q_id",
+        F.col("n_toks").alias("n_q_tokens"),
+        "toks",
     )
     t_packed = _pack(t_tokens, "t_id", "t_tok").join(t_cells, "t_id").select(
         "cell", "t_id", "n_toks", "toks"
     )
 
-    empty = pa.table(
-        {
-            "q_id": pa.array([], pa.int64()),
-            "t_id": pa.array([], pa.int64()),
-            "maxsim_units": pa.array([], pa.int64()),
-            "n_q_tokens": pa.array([], pa.int64()),
-        }
+    return _cogroup_topk(
+        t_packed, q_packed, _maxsim_plane, k,
+        value="maxsim_units", value_type="long", carry=("n_q_tokens",),
     )
 
-    # Arrow-native cogroup scorer (round 15 — the same §4.2 boundary fix as
-    # _block_cogroup_scorer_arrow): the flat token-matrix columns cross the
-    # Python boundary as ONE contiguous int64 buffer per side (list offsets
-    # give the per-doc slices) instead of being boxed into object-dtype
-    # pandas cells one numpy array per row.  The numpy core — one
-    # exactness-guarded matmul per (query, cell), segmented max, int64 sum —
-    # is byte-for-byte the pandas twin's, so results stay bit-identical.
-    def score(mem: "pa.Table", qs: "pa.Table") -> "pa.Table":
-        if mem.num_rows == 0 or qs.num_rows == 0:
-            return empty
-        t_ids = mem.column("t_id").to_numpy()
-        # ragged docs arrive FLAT: one concatenated int64 vector per doc
-        # plus its token count; infer dim from the first doc and reshape
-        counts = mem.column("n_toks").to_numpy()
-        toks_arr = mem.column("toks").combine_chunks()
-        if toks_arr.null_count:
-            raise ValueError("NULL token matrix in maxsim cogroup scorer input")
-        m_offs = np.asarray(toks_arr.offsets)
-        flat_all = toks_arr.flatten().to_numpy(zero_copy_only=False)
-        dim = int(m_offs[1] - m_offs[0]) // int(counts[0])
-        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-        T_all = flat_all.reshape(-1, dim)
-        q_toks_arr = qs.column("toks").combine_chunks()
-        if q_toks_arr.null_count:
-            raise ValueError("NULL token matrix in maxsim cogroup scorer input")
-        # offsets of a sliced ListArray need not start at 0, while flatten()
-        # returns only the covered values — rebase so they index q_flat
-        q_offs = np.asarray(q_toks_arr.offsets)
-        q_offs = q_offs - q_offs[0]
-        q_flat = q_toks_arr.flatten().to_numpy(zero_copy_only=False)
-        out_q, out_t, out_units, out_ntok = [], [], [], []
-        for qi, (qid, qn) in enumerate(
-            zip(qs.column("q_id").to_numpy(), qs.column("n_toks").to_numpy())
-        ):
-            Q = q_flat[q_offs[qi]:q_offs[qi + 1]].reshape(int(qn), -1)
-            # ONE matmul per (query, cell), then a segmented max per doc:
-            # max and sum over int64 are exact, so this is bit-identical to
-            # the expression path's per-token-pair fold.  Round 14: route
-            # the matmul through float64 BLAS when provably exact (every
-            # dot AND the nq-term sum are integers < 2^53 — see
-            # exact_int_matmul); numpy int64 matmul is a naive C loop.
-            mq = int(np.abs(Q).max(initial=0))
-            mt = int(np.abs(T_all).max(initial=0))
-            if mq * mt * Q.shape[1] * max(int(qn), 1) < 2**53:
-                dots = Q.astype(np.float64) @ T_all.T.astype(np.float64)
-                seg_max = np.maximum.reduceat(dots, starts, axis=1)
-                sums = seg_max.sum(axis=0).astype(np.int64)
-            else:
-                dots = Q @ T_all.T                                   # (nq, Σ|doc|)
-                seg_max = np.maximum.reduceat(dots, starts, axis=1)  # (nq, |docs|)
-                sums = seg_max.sum(axis=0)                           # (|docs|,)
-            keep = t_ids != qid
-            if not keep.any():
-                continue
-            n_keep = int(keep.sum())
-            out_q.append(np.full(n_keep, qid, dtype=np.int64))
-            out_t.append(t_ids[keep])
-            out_units.append(sums[keep])
-            out_ntok.append(np.full(n_keep, int(qn), dtype=np.int64))
-        if not out_q:
-            return empty
-        return pa.table(
-            {
-                "q_id": np.concatenate(out_q),
-                "t_id": np.concatenate(out_t),
-                "maxsim_units": np.concatenate(out_units),
-                "n_q_tokens": np.concatenate(out_ntok),
-            }
-        )
 
-    cand = (
-        t_packed.groupBy("cell")
-        .cogroup(q_packed.groupBy("cell"))
-        .applyInArrow(score, "q_id long, t_id long, maxsim_units long, n_q_tokens long")
-    )
-    return window_rank_topk(
-        cand, ["q_id"], [F.col("maxsim_units").desc(), F.col("t_id").asc()], k, rank_col="rnk"
-    )
+# Element budget of one stacked MaxSim dots block (2^24 float64 = 128 MB):
+# a hot cell splits its queries into whole-query slices under it.
+_MAXSIM_BLOCK_ELEMS = 1 << 24
+
+
+def _token_blocks(tbl, count_col: str, np):
+    """(Σ tokens, d) matrix of a packed token column (``toks``: each row's
+    token vectors concatenated flat) plus each row's first-token offset."""
+    counts = tbl.column(count_col).to_numpy()
+    arr = tbl.column("toks").combine_chunks()
+    if arr.null_count:
+        raise ValueError("NULL token matrix in maxsim cogroup scorer input")
+    flat = arr.flatten().to_numpy(zero_copy_only=False)
+    n = int(counts.sum())
+    if not n or flat.size % n or (np.diff(arr.offsets) != counts * (flat.size // n)).any():
+        raise ValueError("ragged token matrix in maxsim cogroup scorer input")
+    return flat.reshape(n, -1), np.concatenate(([0], np.cumsum(counts)[:-1]))
+
+
+def _maxsim_plane(mem, qs):
+    """MaxSim plane: units[t, q] = Σ_{q tok} max_{t tok} <q_tok, t_tok>.
+    All query tokens stack into ONE matmul against all doc tokens, then
+    a segmented max over each doc's tokens and a segmented sum over each
+    query's tokens.  int64 max/sum are exact and order-free, so this is
+    bit-identical to the expression path's per-token-pair fold.  The
+    matmul runs through float64 BLAS when every dot AND every query's
+    token sum is an integer < 2^53 (``exact_int_matmul``'s argument with
+    the sum's term count folded in); otherwise int64 throughout."""
+    import numpy as np
+
+    T, t_starts = _token_blocks(mem, "n_toks", np)
+    Q, q_starts = _token_blocks(qs, "n_q_tokens", np)
+    q_bounds = np.append(q_starts, Q.shape[0])
+    max_nq = int(np.diff(q_bounds).max())
+    if int(np.abs(Q).max()) * int(np.abs(T).max()) * Q.shape[1] * max_nq < 2**53:
+        Q, Tt = Q.astype(np.float64), T.T.astype(np.float64)
+    else:
+        Tt = T.T
+    step = max(1, _MAXSIM_BLOCK_ELEMS // (T.shape[0] * max_nq))
+    units = []
+    for lo in range(0, q_starts.size, step):
+        rows = slice(q_bounds[lo], q_bounds[min(lo + step, q_starts.size)])
+        best = np.maximum.reduceat(Q[rows] @ Tt, t_starts, axis=1)
+        units.append(np.add.reduceat(best, q_starts[lo:lo + step] - q_bounds[lo], axis=0))
+    return np.concatenate(units).T.astype(np.int64)
 
 
 def maxsim_route_cells_trained(

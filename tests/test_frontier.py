@@ -266,6 +266,17 @@ def test_maxsim_vectorized_matches_expression_at_pruning_probe(spark):
         maxsim_topk_routed_vectorized,
     )
 
+    # plus queries of 1, 3 and 8 tokens: the plane's segmented sum over
+    # query tokens must honour unequal query lengths in one stacked matmul
+    qv = rng.normal(size=(12, 5)).astype(np.float32)
+    ragged = [
+        (100 + i, int(tok), [float(x) for x in qv[j]])
+        for i, (n, j0) in enumerate(((1, 0), (3, 1), (8, 4)))
+        for tok, j in enumerate(range(j0, j0 + n))
+    ]
+    q = q.unionByName(
+        spark.createDataFrame(ragged, "q_id long, q_tok long, vec array<float>")
+    )
     for nprobe in (1, 2):
         expr = rows_set(
             maxsim_topk_routed(q, t, k=3, n_cells=3, nprobe=nprobe),
@@ -276,6 +287,38 @@ def test_maxsim_vectorized_matches_expression_at_pruning_probe(spark):
             "q_id", "t_id", "maxsim_units", "n_q_tokens",
         )
         assert expr == vec
+        assert {r[0] for r in vec} >= {100, 101, 102}
+
+
+def test_maxsim_plane_matches_reference_across_query_slices(monkeypatch):
+    """The MaxSim plane (one stacked matmul, segmented max over doc tokens,
+    segmented sum over query tokens) equals a per-pair Python reference on
+    both sides of its 2^53 float64 guard, and a hot cell split into
+    one-query slices (the _MAXSIM_BLOCK_ELEMS bound) scores identically."""
+    import numpy as np
+    import pyarrow as pa
+
+    from cell_kn_mvp_etl_ontologies_spark.operators import similarity as S
+
+    rng = np.random.default_rng(5)
+    for mag in (1000, 10**8):  # float64 BLAS path, then the int64 fallback
+        def packed(counts, count_col):
+            mats = [rng.integers(-mag, mag, size=(n, 4)) for n in counts]
+            tbl = pa.table({
+                count_col: np.array(counts, dtype=np.int64),
+                "toks": pa.array([m.reshape(-1).tolist() for m in mats], pa.list_(pa.int64())),
+            })
+            return tbl, mats
+
+        mem, docs = packed([2, 1, 3, 2], "n_toks")
+        qs, queries = packed([1, 3, 8, 2], "n_q_tokens")
+        ref = np.array([
+            [sum(max(int(a @ b) for b in d) for a in q) for q in queries] for d in docs
+        ], dtype=np.int64)
+        assert np.array_equal(S._maxsim_plane(mem, qs), ref)
+        monkeypatch.setattr(S, "_MAXSIM_BLOCK_ELEMS", 1)
+        assert np.array_equal(S._maxsim_plane(mem, qs), ref)
+        monkeypatch.undo()
 
 
 def test_bitmap_sliding_distinct_matches_recount(spark):

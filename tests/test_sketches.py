@@ -225,28 +225,29 @@ def test_unigram_lm_score_frozen_vocab_counts_oov(spark):
 
 
 def test_cosine_topk_vectorized_matches_expression_path(spark):
+    """The numpy brute tier (cosine_topk_routed — the implementation of
+    catalog ID similarity_topk_vectorized) equals the expression path."""
     import numpy as np
 
     rng = np.random.RandomState(7)
     rows = [(int(i), [float(x) for x in rng.randn(8)]) for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
     from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
-        cosine_topk_vectorized,
+        cosine_topk_routed,
         similarity_topk,
     )
 
     q = df.filter(F.col("vec_id") < 5)
     a = similarity_topk(q, df, k=4, quantized=True).select("q_id", "t_id", "cos", "rnk")
-    b = cosine_topk_vectorized(q, df, k=4).select("q_id", "t_id", "cos", "rnk")
+    b = cosine_topk_routed(q, df, k=4).select("q_id", "t_id", "cos", "rnk")
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 def test_cosine_topk_routed_bit_identical_to_vectorized_and_expression(spark):
     """The routed cogroup brute tier (no driver collect on either side)
-    must be bit-identical to BOTH the expression path and the
-    driver-collect vectorized twin — including cos doubles — across
-    block counts (1 block = one big matmul; 16 blocks > |targets|/k
-    exercises near-empty blocks)."""
+    must be bit-identical to the expression path — including cos
+    doubles — across block counts (1 block = one big matmul; 16 blocks >
+    |targets|/k exercises near-empty blocks)."""
     import numpy as np
 
     rng = np.random.RandomState(11)
@@ -254,7 +255,6 @@ def test_cosine_topk_routed_bit_identical_to_vectorized_and_expression(spark):
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
     from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
         cosine_topk_routed,
-        cosine_topk_vectorized,
         similarity_topk,
     )
 
@@ -267,15 +267,6 @@ def test_cosine_topk_routed_bit_identical_to_vectorized_and_expression(spark):
             .collect(),
         )
     )
-    b = sorted(
-        map(
-            tuple,
-            cosine_topk_vectorized(q, df, k=4)
-            .select("q_id", "t_id", "cos", "rnk")
-            .collect(),
-        )
-    )
-    assert a == b
     for n_blocks in (1, 4, 16):
         c = sorted(
             map(
@@ -326,34 +317,6 @@ def test_cosine_topk_routed_double_bit_identical_to_expression(spark):
             )
         )
         assert c == a, n_blocks
-
-
-def test_ivf_vectorized_serving_matches_expression_path(spark):
-    import numpy as np
-
-    from cell_kn_mvp_etl_ontologies_spark.operators.clustering import kmeans_fit
-    from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_topk_prebuilt,
-        ivf_topk_prebuilt_vectorized,
-    )
-
-    rng = np.random.RandomState(11)
-    rows = [(int(i), [float(x) for x in rng.randn(8)]) for i in range(120)]
-    em = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
-    cents = kmeans_fit(em, "vec_id", "embedding", k=4, n_iter=1)
-    centroids = em.sparkSession.createDataFrame(
-        [
-            (int(r.cell), [v / 1000.0 for v in r.cv])
-            for r in cents.collect()
-        ],
-        "vec_id LONG, embedding ARRAY<FLOAT>",
-    )
-    index = build_ivf_index(em, centroids)
-    q = em.filter(F.col("vec_id") < 6)
-    a = ivf_topk_prebuilt(q, index, centroids, k=3, nprobe=2)
-    b = ivf_topk_prebuilt_vectorized(q, index, centroids, k=3, nprobe=2)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 # ----------------------------------------------------- NULL-input pins ----
@@ -409,9 +372,10 @@ def test_quantize_np_half_up_matches_spark_round_at_dyadic_values(spark):
 
 def test_cosine_topk_vectorized_bit_identical_at_dyadic_embeddings(spark):
     """The r4 advice counterexample: embeddings made of multiples of 1/16 so
-    every component scales onto .5 — np.rint would silently diverge here."""
+    every component scales onto .5 — np.rint would silently diverge here.
+    The numpy brute tier is cosine_topk_routed."""
     from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
-        cosine_topk_vectorized,
+        cosine_topk_routed,
         similarity_topk,
     )
 
@@ -424,7 +388,7 @@ def test_cosine_topk_vectorized_bit_identical_at_dyadic_embeddings(spark):
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>")
     q = df.filter(F.col("vec_id") < 4)
     a = similarity_topk(q, df, k=3, quantized=True).select("q_id", "t_id", "cos", "rnk")
-    b = cosine_topk_vectorized(q, df, k=3).select("q_id", "t_id", "cos", "rnk")
+    b = cosine_topk_routed(q, df, k=3).select("q_id", "t_id", "cos", "rnk")
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
@@ -438,7 +402,6 @@ def test_ivf_routed_serving_matches_expression_path_dyadic(spark):
         build_ivf_index,
         ivf_topk_prebuilt,
         ivf_topk_prebuilt_routed,
-        ivf_topk_prebuilt_vectorized,
     )
 
     rnd = random.Random(13)
@@ -455,8 +418,7 @@ def test_ivf_routed_serving_matches_expression_path_dyadic(spark):
     q = em.filter(F.col("vec_id") < 5)
     a = sorted(map(tuple, ivf_topk_prebuilt(q, index, centroids, k=3, nprobe=2).collect()))
     b = sorted(map(tuple, ivf_topk_prebuilt_routed(q, index, centroids, k=3, nprobe=2).collect()))
-    c = sorted(map(tuple, ivf_topk_prebuilt_vectorized(q, index, centroids, k=3, nprobe=2).collect()))
-    assert a == b == c
+    assert a == b
 
 
 def test_km_position_overflow_guard(spark):
@@ -530,18 +492,23 @@ def test_ivf_assign_vectorized_bit_identical(spark):
         assert a == b
 
 
-def test_numpy_twins_replicate_spark_nan_desc_ordering(spark):
-    """Zero-norm contract pin: Spark's non-ANSI 0/0 double division is
-    NULL (not IEEE NaN) and desc windows order nulls LAST; the numpy twin's
-    NaN sorts last in its local shortlist and returns to Spark as NULL via
-    the pandas->Arrow hop — so BOTH paths exclude the zero-norm row from a
-    top-k with enough valid candidates, identically.  (ANSI mode instead
-    raises DIVIDE_BY_ZERO in the expression path: zero-norm input is
-    invalid there by construction.)"""
+def test_cosine_routed_rungs_reject_zero_norm_vectors(spark):
+    """Zero-norm contract pin.  Expression path: Spark's non-ANSI 0/0
+    double division is NULL and desc windows order nulls LAST, so the
+    zero-norm row drops out of a top-k with enough valid candidates.
+    (ANSI mode instead raises DIVIDE_BY_ZERO: zero-norm input is invalid
+    there by construction.)  Routed rungs: numpy's 0/0 is NaN, which
+    Spark's DESC window ranks FIRST — so both cosine planes raise a
+    ValueError naming the vec_id instead, at every block count, including
+    one where the zero vector's block has fewer than k+1 valid rows (its
+    NaN would otherwise survive the local top-k and lead the result)."""
     import random
 
+    import pytest
+
     from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
-        cosine_topk_vectorized,
+        cosine_topk_routed,
+        cosine_topk_routed_double,
         similarity_topk,
     )
 
@@ -552,19 +519,21 @@ def test_numpy_twins_replicate_spark_nan_desc_ordering(spark):
     q = df.filter(F.col("vec_id") < 2)
     prev = spark.conf.get("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.ansi.enabled", "false")
-    a = sorted(
-        (r.q_id, r.rnk, r.t_id)
-        for r in similarity_topk(q, df, k=3, quantized=True).collect()
-    )
-    b = sorted(
-        (r.q_id, r.rnk, r.t_id)
-        for r in cosine_topk_vectorized(q, df, k=3).collect()
-    )
-    spark.conf.set("spark.sql.ansi.enabled", prev)
-    assert a == b
-    # the zero-norm row is excluded from BOTH results (NULL cosine,
-    # nulls-last) — twelve valid candidates fill every top-3
+    try:
+        a = sorted(
+            (r.q_id, r.rnk, r.t_id)
+            for r in similarity_topk(q, df, k=3, quantized=True).collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    # the zero-norm row is excluded (NULL cosine, nulls-last) — twelve
+    # valid candidates fill every top-3
     assert all(t != 99 for (_, _, t) in a)
+    # 13 targets over 16 blocks: vec_id 99's block holds < k+1 rows
+    for n_blocks in (1, 16):
+        for rung in (cosine_topk_routed, cosine_topk_routed_double):
+            with pytest.raises(Exception, match="zero-norm vector vec_id=99"):
+                rung(q, df, k=3, n_blocks=n_blocks).collect()
 
 
 # --------------------------------------------------------------------------
@@ -594,17 +563,7 @@ def test_driver_bound_guards_fail_loudly(spark):
     with pytest.raises(DriverBoundExceeded, match="site.*alt"):
         check_driver_bound(11, 10, "site", "alt")
 
-    # cosine_topk_vectorized |Q| cap (lowered so the test is cheap)
-    from cell_kn_mvp_etl_ontologies_spark.operators.similarity import (
-        cosine_topk_vectorized,
-    )
-
     df = _vecs(spark, 30)
-    with pytest.raises(DriverBoundExceeded, match="cosine_topk_routed"):
-        cosine_topk_vectorized(df.filter(F.col("vec_id") < 20), df, k=3, max_queries=10)
-    # within bound still works
-    assert cosine_topk_vectorized(df.filter(F.col("vec_id") < 5), df, k=3,
-                                  max_queries=10).count() > 0
 
     # bloom literal m_bits cap — pure parameter check, no job
     from cell_kn_mvp_etl_ontologies_spark.operators.sketches import (

@@ -5,7 +5,7 @@ Builds the same 80k-corpus / 64-cell index as bench.py's ann_ivf_80k, then
 runs |Q| = 10,000 queries through BOTH serving paths:
 
   - ivf_topk_prebuilt         (expression path, per-candidate HOF dots)
-  - ivf_topk_prebuilt_routed  (cogrouped applyInPandas matmul, no driver
+  - ivf_topk_prebuilt_routed  (cogrouped Arrow matmul, no driver
                                collect of the query side)
 
 and asserts the two result sets are IDENTICAL — every (q_id, t_id, cos, rnk)
