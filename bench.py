@@ -591,6 +591,35 @@ def bm25_documents(spark):
     )
 
 
+def lineitem_triples(spark):
+    """~600k synthetic triples in the long triples schema from sf lineitem:
+    CL subjects, two of three rows a subClassOf edge to a GO object, the
+    third a label literal.  Input of graph_build_full and of the wire-sink
+    rows' graph."""
+    from cell_kn_mvp_etl_ontologies_spark.fixtures import OBO, RDFS
+
+    li = parallelize(load_table(spark, SF_DIR, "lineitem"))
+    subj = F.concat(
+        F.lit(OBO + "CL_"), F.lpad((F.col("l_orderkey") % 100000).cast("string"), 7, "0")
+    )
+    obj = F.concat(
+        F.lit(OBO + "GO_"), F.lpad((F.col("l_partkey") % 50000).cast("string"), 7, "0")
+    )
+    is_edge = (F.col("l_linenumber") % 3) != 0
+    return li.select(
+        F.lit("synthetic.owl").alias("src_file"),
+        subj.alias("subject"),
+        F.when(is_edge, F.lit(RDFS + "subClassOf"))
+        .otherwise(F.lit(RDFS + "label"))
+        .alias("predicate"),
+        F.when(is_edge, F.lit("iri")).otherwise(F.lit("literal")).alias("object_kind"),
+        F.when(is_edge, obj).alias("object_iri"),
+        F.when(~is_edge, F.concat(F.lit("label for "), subj)).alias("object_lexical"),
+        F.lit(None).cast("string").alias("object_lang"),
+        F.lit(None).cast("string").alias("object_datatype"),
+    )
+
+
 def graph_build_full(spark):
     """The flagship ontology pipeline on ~600k synthetic triples: URI/VTuple
     parse chains, predicate labeling, vertex pivot, deprecated filter, edge
@@ -607,32 +636,11 @@ def graph_build_full(spark):
     attrs pivot (valid-keys semi-joins, see plans/graph_build.py) the two
     modes are within noise of each other at sf0.1 (min ~7.3 vs ~7.6 s over
     5 runs); True is kept as the production posture for ontology corpora."""
-    from cell_kn_mvp_etl_ontologies_spark.fixtures import OBO, RDFS, fixture_ro_terms
+    from cell_kn_mvp_etl_ontologies_spark.fixtures import fixture_ro_terms
     from cell_kn_mvp_etl_ontologies_spark.plans import build_graph
 
     spark.catalog.clearCache()
-
-    li = parallelize(load_table(spark, SF_DIR, "lineitem"))
-    subj = F.concat(
-        F.lit(OBO + "CL_"), F.lpad((F.col("l_orderkey") % 100000).cast("string"), 7, "0")
-    )
-    obj = F.concat(
-        F.lit(OBO + "GO_"), F.lpad((F.col("l_partkey") % 50000).cast("string"), 7, "0")
-    )
-    is_edge = (F.col("l_linenumber") % 3) != 0
-    triples = li.select(
-        F.lit("synthetic.owl").alias("src_file"),
-        subj.alias("subject"),
-        F.when(is_edge, F.lit(RDFS + "subClassOf"))
-        .otherwise(F.lit(RDFS + "label"))
-        .alias("predicate"),
-        F.when(is_edge, F.lit("iri")).otherwise(F.lit("literal")).alias("object_kind"),
-        F.when(is_edge, obj).alias("object_iri"),
-        F.when(~is_edge, F.concat(F.lit("label for "), subj)).alias("object_lexical"),
-        F.lit(None).cast("string").alias("object_lang"),
-        F.lit(None).cast("string").alias("object_datatype"),
-    )
-    g = build_graph(triples, fixture_ro_terms(spark), persist_clean=True)
+    g = build_graph(lineitem_triples(spark), fixture_ro_terms(spark), persist_clean=True)
     return g.edges
 
 
@@ -649,34 +657,10 @@ def _ensure_wire_state(spark):
         import threading
         from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-        from cell_kn_mvp_etl_ontologies_spark.fixtures import (
-            OBO,
-            RDFS,
-            fixture_ro_terms,
-        )
+        from cell_kn_mvp_etl_ontologies_spark.fixtures import fixture_ro_terms
         from cell_kn_mvp_etl_ontologies_spark.plans import build_graph
 
-        li = parallelize(load_table(spark, SF_DIR, "lineitem"))
-        subj = F.concat(
-            F.lit(OBO + "CL_"), F.lpad((F.col("l_orderkey") % 100000).cast("string"), 7, "0")
-        )
-        obj = F.concat(
-            F.lit(OBO + "GO_"), F.lpad((F.col("l_partkey") % 50000).cast("string"), 7, "0")
-        )
-        is_edge = (F.col("l_linenumber") % 3) != 0
-        triples = li.select(
-            F.lit("synthetic.owl").alias("src_file"),
-            subj.alias("subject"),
-            F.when(is_edge, F.lit(RDFS + "subClassOf"))
-            .otherwise(F.lit(RDFS + "label"))
-            .alias("predicate"),
-            F.when(is_edge, F.lit("iri")).otherwise(F.lit("literal")).alias("object_kind"),
-            F.when(is_edge, obj).alias("object_iri"),
-            F.when(~is_edge, F.concat(F.lit("label for "), subj)).alias("object_lexical"),
-            F.lit(None).cast("string").alias("object_lang"),
-            F.lit(None).cast("string").alias("object_datatype"),
-        )
-        g = build_graph(triples, fixture_ro_terms(spark), persist_clean=True)
+        g = build_graph(lineitem_triples(spark), fixture_ro_terms(spark), persist_clean=True)
         v = g.vertices.persist()
         e = g.edges.persist()
         _WIRE_STATE["n_vertices"] = v.count()

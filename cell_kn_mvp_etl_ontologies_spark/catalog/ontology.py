@@ -431,11 +431,14 @@ def source_owl_datasource_q(spark, sf_dir):
     """,
 )
 def extract_triples_owl_q(spark, sf_dir):
-    """Full extraction chain from OWL files: root-ns classes, predicate
-    whitelist, restriction flattening, dedup.  Ref: OntologyTripleParser.java:62-171."""
+    """Full extraction chain from OWL files: ``extract_triples`` scopes to
+    root-ns classes and restriction bnodes, ``clean_triples`` whitelists
+    predicates, flattens restrictions and dedups.
+    Ref: OntologyTripleParser.java:62-171."""
     from ..plans.extract import extract_triples
+    from ..plans.graph_build import clean_triples
 
-    clean = extract_triples(spark, _fixture_owl_dir())
+    clean = clean_triples(extract_triples(spark, _fixture_owl_dir()))
     return clean.groupBy("object_kind").agg(F.count(F.lit(1)).cast("int").alias("n"))
 
 

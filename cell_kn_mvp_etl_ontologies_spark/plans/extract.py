@@ -1,9 +1,10 @@
 """OWL → triples extraction plan (reference EP1 steps 1-3, EP2).
 
-Composes the binaryFile/mapInPandas scans with the reference's filter chain:
-root-namespace resolution, class filter, predicate whitelist, restriction
-flattening, validity filter, global dedup — all declarative DataFrame ops
-(SURVEY.md §3).
+Scopes the binaryFile/mapInPandas scan to the statements the graph build
+cleans: root-namespace resolution, class filter and validity filter, all
+declarative DataFrame ops (SURVEY.md §3).  The predicate whitelist,
+restriction flattening and global dedup run once, in
+``graph_build.clean_triples``.
 """
 
 from __future__ import annotations
@@ -12,9 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..constants import IAO_ROOT_TERM, KIND_IRI
-from ..operators.filters import filter_skip_file
-from ..plans.graph_build import clean_triples
+from ..constants import IAO_ROOT_TERM, OWL_ON_PROPERTY, OWL_SOME_VALUES_FROM
+from ..operators.filters import filter_skip_file, valid_triple_predicate
 from ..sources.owl import OWL_NS, RDF_NS, scan_rdf_triples, scan_xml_elements
 from .graph_build import GraphBuildResult, build_graph
 
@@ -45,72 +45,65 @@ def extract_triples(
     path: str,
     test_object: bool = False,
     glob: str = "*.owl",
-    materialize: bool = True,
     persisted_out: list[DataFrame] | None = None,
 ) -> DataFrame:
-    """Clean triples from a directory of OWL files.
+    """Scope a directory of OWL files to the statements ``clean_triples``
+    turns into the ontology's unique triples.
 
-    Chain (per file, all as one DataFrame DAG): raw RDF/XML scan → skip
-    ro.owl → keep statements of root-namespace classes (+ bnode statements
-    for the flattener) → predicate whitelist + restriction flattening +
-    global dedup (clean_triples) → validity filter (strict object check when
-    test_object).  Ref: OntologyTripleParser.java:62-121,159-171.
+    Per file, as one DataFrame DAG: raw RDF/XML scan → skip ro.owl → root
+    namespace → keep the statements of root-namespace classes that pass the
+    validity rule row by row (strict object check when ``test_object``),
+    plus the ``owl:onProperty`` / ``owl:someValuesFrom`` statements of
+    restriction bnodes.  Under ``test_object`` a ``someValuesFrom`` row whose
+    object lies outside the root namespace is dropped, since its flattened
+    triple would fail the same check.  No whitelist, flattening or dedup
+    happens here: ``clean_triples`` (run by ``build_graph``) is the single
+    cleaning pass.  Output: the triples schema, ``src_file`` included.
+    Ref: OntologyTripleParser.java:62-121,159-171.
 
-    ``materialize=True`` persists the raw parsed triples: the Arrow-batched
-    Python RDF parse is the most expensive narrow stage in the pipeline and
-    this plan references it from ~8 places (namespace derivation, class
-    semi-join, bnode flattener, dedup) — parse ONCE, consume many.  In a
-    production run the same effect comes from landing raw triples to parquet
-    right after parsing; the persist is the in-session equivalent.
+    The raw parse is persisted and is ``persisted_out[0]``: the Arrow-batched
+    Python RDF parse is the pipeline's most expensive narrow stage, read here
+    by the namespace derivation, the class filter and the restriction feed.
     """
-    raw = scan_rdf_triples(spark, path, glob)
-    if materialize:
-        raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
-        if persisted_out is not None:
-            persisted_out.append(raw)
+    raw = scan_rdf_triples(spark, path, glob).persist(StorageLevel.MEMORY_AND_DISK)
+    if persisted_out is not None:
+        persisted_out.append(raw)
     raw = filter_skip_file(raw)
     root_ns = derive_root_ns(raw)
-    if materialize:
-        # per-file namespace dimension (one row per file): referenced by the
-        # class filter, the bnode flattener feed, and the final validity
-        # filter — persist so its two aggregations run once, not three times
-        root_ns = root_ns.persist(StorageLevel.MEMORY_AND_DISK)
-        if persisted_out is not None:
-            persisted_out.append(root_ns)
 
     classes = (
         raw.filter((F.col("predicate") == RDF_TYPE) & (F.col("object_iri") == OWL_CLASS))
         .select("src_file", "subject")
         .distinct()
     )
-    class_stmts = raw.join(classes, on=["src_file", "subject"], how="left_semi")
-    class_stmts = class_stmts.join(root_ns, "src_file").filter(
-        F.col("subject").startswith(F.col("root_ns"))
+    class_stmts = (
+        raw.join(classes, on=["src_file", "subject"], how="left_semi")
+        .join(root_ns, "src_file")
+        .filter(
+            F.col("subject").startswith(F.col("root_ns"))
+            & valid_triple_predicate(F.col("root_ns"), test_object)
+        )
     )
-    # statements about bnodes feed the restriction flattener
-    bnode_stmts = raw.filter(F.col("subject").startswith("_:")).join(root_ns, "src_file")
-    kept = class_stmts.unionByName(bnode_stmts)
-
-    subject_ok = F.col("subject").contains(F.col("root_ns"))
+    restrictions = raw.filter(
+        F.col("subject").startswith("_:")
+        & F.col("predicate").isin(OWL_ON_PROPERTY, OWL_SOME_VALUES_FROM)
+    )
     if test_object:
-        object_named = F.col("object_kind") == KIND_IRI
-        object_ok = F.coalesce(F.col("object_iri").contains(F.col("root_ns")), F.lit(False))
-        valid = subject_ok & (~object_named | object_ok)
-    else:
-        valid = subject_ok
-    # clean first (whitelist + flatten + dedup), then validity — flattened
-    # triples must pass the same validity check (OntologyTripleParser.java:109-115)
-    cleaned = clean_triples(kept.drop("root_ns"), skip_dictionary_file=False)
-    return (
-        cleaned.join(root_ns, "src_file")
-        .filter(valid)
-        .drop("root_ns")
-    )
+        restrictions = (
+            restrictions.join(root_ns, "src_file")
+            .filter(
+                (F.col("predicate") != OWL_SOME_VALUES_FROM)
+                | F.coalesce(F.col("object_iri").contains(F.col("root_ns")), F.lit(False))
+            )
+            .drop("root_ns")
+        )
+    return class_stmts.drop("root_ns").unionByName(restrictions)
 
 
 def ontology_graph_from_owl(spark: SparkSession, path: str, test_object: bool = False) -> GraphBuildResult:
-    """Full EP1 pipeline: OWL directory → property graph.  The ro.owl term
-    dictionary is parsed with the element scan (broadcast downstream)."""
+    """Full EP1 pipeline: OWL directory → scoped statements → property graph
+    (``build_graph`` cleans them once).  The ro.owl term dictionary is parsed
+    with the element scan (broadcast downstream)."""
     persisted: list[DataFrame] = []
     triples = extract_triples(spark, path, test_object, persisted_out=persisted)
     ro_terms = scan_xml_elements(spark, path, glob="ro.owl")

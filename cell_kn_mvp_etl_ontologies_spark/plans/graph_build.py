@@ -27,12 +27,7 @@ from pyspark.storagelevel import StorageLevel
 
 from ..constants import KIND_IRI
 from ..functions import fn_normalize_edge_label, fn_normalize_edge_source, fn_predicate_label
-from ..operators.aggregates import (
-    agg_dedup_edges,
-    agg_distinct_triples,
-    agg_distinct_vertices,
-    agg_pivot_vertex_attrs,
-)
+from ..operators.aggregates import agg_dedup_edges, agg_distinct_vertices, agg_pivot_vertex_attrs
 from ..operators.filters import (
     filter_object_is_literal,
     filter_predicate_ns_whitelist,
@@ -62,24 +57,24 @@ class GraphBuildResult:
             df.unpersist()
 
 
-def clean_triples(
-    triples: DataFrame, skip_dictionary_file: bool = True, keep_src_file: bool = True
-) -> DataFrame:
-    """Named-object triples + flattened restrictions, predicate-whitelisted,
-    globally deduplicated.  The upstream per-file root-namespace and class
-    filters (OntologyTripleParser.java:74-77) are applied at extraction time
-    by the sources; this operates on the long triples store.
+def clean_triples(triples: DataFrame) -> DataFrame:
+    """The single cleaning pass: skip ro.owl, then named-object triples
+    (predicate-whitelisted) plus flattened restrictions, globally
+    deduplicated (OntologyTripleParser.java:159-171, one HashSet per run).
 
-    ``keep_src_file=False`` drops the provenance column before the dedup.
-    The dedup key excludes src_file either way; carrying it as a passthrough
-    forces the dedup into First()-aggregation, whose string buffer demotes
-    the whole aggregate to SortAggregate (sorting 5 long-URI keys per
-    partition).  Without it the dedup is a pure distinct — HashAggregate
+    Input is raw or scoped triples — ``plans.extract.extract_triples`` output
+    or a long triples store; the per-file root-namespace, class and validity
+    filters (OntologyTripleParser.java:74-77) belong to that scoping step.
+    The whitelist applies to class statements; flattened restriction
+    triples are kept whatever their predicate's namespace.
+
+    ``src_file`` is dropped before the dedup, whose key excludes it anyway:
+    carried as a passthrough it forces First()-aggregation, whose string
+    buffer demotes the aggregate to SortAggregate (sorting 5 long-URI keys
+    per partition).  Without it the dedup is a pure distinct — HashAggregate
     with an empty buffer — measured ~25% faster on the dedup stage at sf0.1.
-    The graph build never reads src_file downstream, so it opts out; callers
-    that re-join per-file state (plans/extract.py) keep the default."""
-    if skip_dictionary_file:
-        triples = filter_skip_file(triples)
+    Nothing downstream reads provenance."""
+    triples = filter_skip_file(triples)
     named = triples.filter(F.col("object_kind") != "bnode").filter(
         # bnode-subject statements (owl:onProperty / owl:someValuesFrom rows)
         # describe restrictions, not classes; they are consumed by the
@@ -88,17 +83,10 @@ def clean_triples(
     )
     named = filter_predicate_ns_whitelist(named)
     flattened = join_flatten_restriction(triples)
-    unioned = named.unionByName(flattened)
-    if not keep_src_file:
-        return unioned.drop("src_file").distinct()
-    return agg_distinct_triples(unioned)
+    return named.unionByName(flattened).drop("src_file").distinct()
 
 
-def parse_uri_dim(
-    clean: DataFrame,
-    materialize: bool = True,
-    persisted_out: list[DataFrame] | None = None,
-) -> DataFrame:
+def parse_uri_dim(clean: DataFrame, persisted_out: list[DataFrame] | None = None) -> DataFrame:
     """Distinct-URI dimension with parsed VTuple fields.
 
     Parsing (regex chains + 20-element isin) runs ONCE per distinct URI
@@ -107,21 +95,19 @@ def parse_uri_dim(
     cheap hash joins (AQE broadcasts the dim when small) for a ~10-100× cut in
     string-parse CPU.
 
-    ``materialize=True`` (the default) persists the parsed dimension
-    (MEMORY_AND_DISK) before the validity filter.  The persist is load-bearing,
-    not a cache hint: ``PushDownPredicates`` substitutes the ``valid`` alias
-    with its defining expression when pushing the filter through the parse
-    projections, inlining ~8 copies of the whole regex chain into a filter
-    that then lands below the union in BOTH branches (~100 regexp_extract
-    calls in one stage).  That overflows the JVM's 64 KB codegen method limit;
-    worse, every task then re-attempts (and re-fails) the janino compile of
-    the ~12k-line stage, turning a 2 s parse into minutes.  The persist
-    boundary stops alias substitution, keeps each parse step in its own small
-    codegen stage, and computes the dimension once for all three joins
-    against it instead of once per join.  At scale the dimension is orders of
-    magnitude smaller than the triple stream, so executor storage holds it
-    comfortably; pass ``materialize=False`` only for plan-shape inspection of
-    the unpersisted DAG.
+    The parsed dimension is persisted (MEMORY_AND_DISK) before the validity
+    filter.  The persist is load-bearing, not a cache hint:
+    ``PushDownPredicates`` substitutes the ``valid`` alias with its defining
+    expression when pushing the filter through the parse projections,
+    inlining ~8 copies of the whole regex chain into a filter that then lands
+    below the union in BOTH branches (~100 regexp_extract calls in one
+    stage).  That overflows the JVM's 64 KB codegen method limit; worse,
+    every task then re-attempts (and re-fails) the janino compile of the
+    ~12k-line stage, turning a 2 s parse into minutes.  The persist boundary
+    stops alias substitution, keeps each parse step in its own small codegen
+    stage, and computes the dimension once for all three joins against it
+    instead of once per join.  At scale the dimension is orders of magnitude
+    smaller than the triple stream, so executor storage holds it comfortably.
 
     Output: (node_uri, id, number) — only valid rows retained, so joins
     against it double as the validity filter (left join + null check, or
@@ -136,11 +122,9 @@ def parse_uri_dim(
         )
         .dropDuplicates(["node_uri"])
     )
-    parsed = with_vtuple(uris, "node_uri", "")
-    if materialize:
-        parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
-        if persisted_out is not None:
-            persisted_out.append(parsed)
+    parsed = with_vtuple(uris, "node_uri", "").persist(StorageLevel.MEMORY_AND_DISK)
+    if persisted_out is not None:
+        persisted_out.append(parsed)
     return parsed.filter(F.col("valid")).select("node_uri", "id", "number")
 
 
@@ -257,6 +241,11 @@ def build_graph(
 ) -> GraphBuildResult:
     """Compose the full triples → graph DAG.
 
+    ``triples`` are raw or scoped (``plans.extract.extract_triples``) triples
+    in the long schema; ``clean_triples`` here is the only whitelist /
+    flatten / dedup pass, and ``GraphBuildResult.clean_triples`` is its
+    output.
+
     Two dimension-sized intermediates are persisted (MEMORY_AND_DISK), each
     consumed by 2-3 downstream joins that would otherwise recompute their
     whole upstream subtree per consumer:
@@ -279,9 +268,7 @@ def build_graph(
     Call ``result.unpersist()`` after materializing all outputs.
     """
     persisted: list[DataFrame] = []
-    # src_file is provenance the graph build never consumes — dropping it
-    # keeps the global dedup a pure HashAggregate distinct (see clean_triples)
-    clean = clean_triples(triples, keep_src_file=False)
+    clean = clean_triples(triples)
     if persist_clean:
         clean = clean.persist(StorageLevel.MEMORY_AND_DISK)
         persisted.append(clean)

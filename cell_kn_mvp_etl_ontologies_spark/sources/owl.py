@@ -235,6 +235,19 @@ def scan_ontology_meta(spark: SparkSession, path: str, glob: str = "*.owl") -> D
 # ---------------------------------------------------------------------------
 # scan_rdf_triples — raw triple extraction (bnodes preserved)
 # ---------------------------------------------------------------------------
+def _check_on_error(on_error: str) -> None:
+    """The triple scans' bad-input policy must be exactly 'fail' or 'skip';
+    anything else would silently pick one of them."""
+    if on_error not in ("fail", "skip"):
+        raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
+
+
+def _malformed_file_error(path: str, err: Exception) -> ValueError:
+    """The 'fail' policy's error: names the file, not just the parser's
+    line/column."""
+    return ValueError(f"malformed OWL file {path}: {err}")
+
+
 def _parse_triples(src_file: str, content: bytes) -> list[tuple]:
     """RDF/XML subset reader: typed node elements with rdf:about; property
     children as rdf:resource refs, literals, or nested anonymous nodes
@@ -604,11 +617,12 @@ def scan_rdf_triples_split(
     trade Hadoop's XmlInputFormat makes.
 
     ``on_error`` mirrors ``scan_rdf_triples``: 'fail' aborts on a malformed
-    file (the index pass detects malformation — expat scans every byte, so
-    nothing reaches the fragment stage unvalidated); 'skip' drops the file
-    and keeps the corpus-scale job alive.
+    file with a ``ValueError`` naming it (the index pass detects
+    malformation — expat scans every byte, so nothing reaches the fragment
+    stage unvalidated); 'skip' drops the file and keeps the corpus-scale job
+    alive.
     """
-    assert on_error in ("fail", "skip")
+    _check_on_error(on_error)
     files = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
 
     index_schema = StructType(
@@ -632,9 +646,9 @@ def scan_rdf_triples_split(
                 data = bytes(content)
                 try:
                     starts, header_end, footer_start = _index_top_level(data)
-                except ExpatError:
+                except ExpatError as e:
                     if on_error == "fail":
-                        raise
+                        raise _malformed_file_error(p, e) from e
                     continue
                 for frag_start, frag_end, bnode_start in _plan_fragments(
                     starts, footer_start, split_bytes
@@ -687,12 +701,13 @@ def scan_rdf_triples(
     """Raw triples scan in the long triples schema (bnodes preserved for the
     downstream flattening join).
 
-    ``on_error``: 'fail' aborts on a malformed file (reference-faithful —
-    Jena throws, OntologyTripleParser.java:68-69); 'skip' drops the file and
-    keeps the job alive — the right posture for web-scale corpora where a
-    single corrupt input must not kill a 1000-executor run.
+    ``on_error``: 'fail' aborts on a malformed file with a ``ValueError``
+    naming it (reference-faithful — Jena throws,
+    OntologyTripleParser.java:68-69); 'skip' drops the file and keeps the job
+    alive — the right posture for web-scale corpora where a single corrupt
+    input must not kill a 1000-executor run.
     """
-    assert on_error in ("fail", "skip")
+    _check_on_error(on_error)
     files = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -703,9 +718,9 @@ def scan_rdf_triples(
             for p, content in zip(pdf["path"], pdf["content"]):
                 try:
                     rows.extend(_parse_triples(_file_name(p), bytes(content)))
-                except ET.ParseError:
+                except ET.ParseError as e:
                     if on_error == "fail":
-                        raise
+                        raise _malformed_file_error(p, e) from e
             yield pd.DataFrame(
                 rows,
                 columns=[

@@ -27,7 +27,13 @@ from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-from .owl import TRIPLES_SCHEMA, _file_name, _parse_triples
+from .owl import (
+    TRIPLES_SCHEMA,
+    _check_on_error,
+    _file_name,
+    _malformed_file_error,
+    _parse_triples,
+)
 
 
 class OwlFilePartition(InputPartition):
@@ -42,6 +48,7 @@ class OwlDataSourceReader(DataSourceReader):
             raise ValueError("owl source requires a path: .load(dir)")
         self.glob = options.get("glob", "*.owl")
         self.on_error = options.get("on_error", "fail")
+        _check_on_error(self.on_error)
 
     def partitions(self) -> Sequence[InputPartition]:
         files = sorted(_glob.glob(os.path.join(self.path, self.glob)))
@@ -56,9 +63,9 @@ class OwlDataSourceReader(DataSourceReader):
             content = fh.read()
         try:
             yield from _parse_triples(_file_name(partition.path), content)
-        except ET.ParseError:
+        except ET.ParseError as e:
             if self.on_error == "fail":
-                raise
+                raise _malformed_file_error(partition.path, e) from e
 
 
 class OwlDataSource(DataSource):

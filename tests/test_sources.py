@@ -11,12 +11,13 @@ from cell_kn_mvp_etl_ontologies_spark.plans.extract import (
     extract_triples,
     ontology_graph_from_owl,
 )
+from cell_kn_mvp_etl_ontologies_spark.plans.graph_build import clean_triples
 from cell_kn_mvp_etl_ontologies_spark.sources.owl import (
     scan_ontology_meta,
     scan_rdf_triples,
     scan_xml_elements,
 )
-from cell_kn_mvp_etl_ontologies_spark.sources.owl_fixtures import write_fixture_dir
+from cell_kn_mvp_etl_ontologies_spark.sources.owl_fixtures import MACROPHAGE_OWL, write_fixture_dir
 
 OBO = "http://purl.obolibrary.org/obo/"
 
@@ -77,7 +78,8 @@ def test_derive_root_ns(spark, owl_dir):
 
 
 def test_extract_triples_golden(spark, owl_dir):
-    clean = extract_triples(spark, owl_dir)
+    scoped = extract_triples(spark, owl_dir)
+    clean = clean_triples(scoped)
     # macrophage subClassOf objects (OntologyTripleParserTest.java:38-55)
     subs = {
         r["object_iri"]
@@ -95,7 +97,7 @@ def test_extract_triples_golden(spark, owl_dir):
     assert (OBO + "RO_0002202", OBO + "CL_0000576") in flat
     assert (OBO + "RO_0002215", OBO + "GO_0031268") in flat
     # ro.owl skipped (OntologyTripleParserTest.java:99-112)
-    assert clean.filter(F.col("src_file") == "ro.owl").count() == 0
+    assert scoped.filter(F.col("src_file") == "ro.owl").count() == 0
     # BFO class outside root namespace excluded
     assert clean.filter(F.col("subject").contains("BFO")).count() == 0
 
@@ -117,7 +119,7 @@ def test_owl_graph_end_to_end(spark, owl_dir):
 
 
 def test_strict_pass_object_filter(spark, owl_dir):
-    clean = extract_triples(spark, owl_dir, test_object=True)
+    clean = clean_triples(extract_triples(spark, owl_dir, test_object=True))
     # strict: named objects outside the root namespace are dropped
     assert clean.filter(F.col("object_iri").contains("GO_")).count() == 0
     assert clean.filter(F.col("object_iri").contains("NCBITaxon")).count() == 0
@@ -139,6 +141,159 @@ def test_owl_datasource_matches_mapinpandas_scan(spark, owl_dir):
     assert via_scan.exceptAll(via_ds).count() == 0
     n_files = via_scan.select("src_file").distinct().count()
     assert via_ds.rdd.getNumPartitions() == n_files
+
+
+# ---------------------------------------------------------------------------
+# One cleaning pass: extract_triples scopes, clean_triples whitelists,
+# flattens and dedups
+# ---------------------------------------------------------------------------
+EX_PART_OF = "http://example.org/rel/partOf"
+RO_DEVELOPS_FROM = OBO + "RO_0002202"
+RO_CAPABLE_OF = OBO + "RO_0002215"
+
+# Root namespace CL.  CL_0000001 carries four restrictions: a foreign (GO)
+# filler, a bnode filler, an in-namespace filler, and one whose property is
+# outside the predicate whitelist.  _:x subClassOf _:y is a bnode chain
+# whose restriction is complete, so a flattener fed every bnode statement
+# would emit a triple with a bnode subject.
+PLANTED_OWL = f"""<?xml version="1.0"?>
+<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+         xmlns:rdfs="http://www.w3.org/2000/01/rdf-schema#"
+         xmlns:owl="http://www.w3.org/2002/07/owl#"
+         xmlns:obo="{OBO}"
+         xmlns:ex="http://example.org/rel/">
+  <owl:Ontology rdf:about="{OBO}planted.owl">
+    <obo:IAO_0000700 rdf:resource="{OBO}CL_0000000"/>
+  </owl:Ontology>
+  <owl:Class rdf:about="{OBO}CL_0000001">
+    <rdfs:label>planted cell</rdfs:label>
+    <ex:note rdf:resource="{OBO}CL_0000002"/>
+    <rdfs:subClassOf>
+      <owl:Restriction>
+        <owl:onProperty rdf:resource="{RO_DEVELOPS_FROM}"/>
+        <owl:someValuesFrom rdf:resource="{OBO}GO_0000001"/>
+      </owl:Restriction>
+    </rdfs:subClassOf>
+    <rdfs:subClassOf>
+      <owl:Restriction>
+        <owl:onProperty rdf:resource="{RO_DEVELOPS_FROM}"/>
+        <owl:someValuesFrom>
+          <owl:Restriction>
+            <owl:onProperty rdf:resource="{RO_CAPABLE_OF}"/>
+            <owl:someValuesFrom rdf:resource="{OBO}CL_0000002"/>
+          </owl:Restriction>
+        </owl:someValuesFrom>
+      </owl:Restriction>
+    </rdfs:subClassOf>
+    <rdfs:subClassOf>
+      <owl:Restriction>
+        <owl:onProperty rdf:resource="{RO_CAPABLE_OF}"/>
+        <owl:someValuesFrom rdf:resource="{OBO}CL_0000002"/>
+      </owl:Restriction>
+    </rdfs:subClassOf>
+    <rdfs:subClassOf>
+      <owl:Restriction>
+        <owl:onProperty rdf:resource="{EX_PART_OF}"/>
+        <owl:someValuesFrom rdf:resource="{OBO}CL_0000002"/>
+      </owl:Restriction>
+    </rdfs:subClassOf>
+  </owl:Class>
+  <owl:Class rdf:about="{OBO}CL_0000002">
+    <rdfs:label>planted filler</rdfs:label>
+  </owl:Class>
+  <rdf:Description rdf:nodeID="x">
+    <rdfs:subClassOf rdf:nodeID="y"/>
+  </rdf:Description>
+  <owl:Restriction rdf:nodeID="y">
+    <owl:onProperty rdf:resource="{RO_DEVELOPS_FROM}"/>
+    <owl:someValuesFrom rdf:resource="{OBO}CL_0000003"/>
+  </owl:Restriction>
+</rdf:RDF>
+"""
+
+
+@pytest.fixture(scope="module")
+def planted_dir(tmp_path_factory):
+    d = tmp_path_factory.mktemp("planted")
+    (d / "planted.owl").write_text(PLANTED_OWL)
+    return str(d)
+
+
+def _iri_pairs(clean, subject):
+    rows = clean.filter((F.col("subject") == subject) & (F.col("object_kind") == "iri"))
+    return {(r["predicate"], r["object_iri"]) for r in rows.collect()}
+
+
+def test_strict_pass_drops_restrictions_with_foreign_or_bnode_fillers(spark, planted_dir):
+    loose = _iri_pairs(clean_triples(extract_triples(spark, planted_dir)), OBO + "CL_0000001")
+    strict = _iri_pairs(
+        clean_triples(extract_triples(spark, planted_dir, test_object=True)), OBO + "CL_0000001"
+    )
+    # without the object check both fillers flatten
+    assert (RO_DEVELOPS_FROM, OBO + "GO_0000001") in loose
+    assert any(p == RO_DEVELOPS_FROM and o.startswith("_:") for p, o in loose)
+    # with it neither does; the in-namespace filler still does
+    assert not any(p == RO_DEVELOPS_FROM for p, _ in strict)
+    assert (RO_CAPABLE_OF, OBO + "CL_0000002") in strict
+
+
+def test_bnode_subclass_chain_yields_no_bnode_subject(spark, planted_dir):
+    from cell_kn_mvp_etl_ontologies_spark.operators import join_flatten_restriction
+
+    # the raw statements do flatten into a bnode-subject triple ...
+    raw_flat = join_flatten_restriction(scan_rdf_triples(spark, planted_dir))
+    assert raw_flat.filter(F.col("subject").startswith("_:")).count() == 1
+    # ... which the scoped pipeline never emits
+    for test_object in (False, True):
+        clean = clean_triples(extract_triples(spark, planted_dir, test_object=test_object))
+        assert clean.filter(F.col("subject").startswith("_:")).count() == 0
+        assert clean.filter(F.col("object_iri") == OBO + "CL_0000003").count() == 0
+
+
+def test_restriction_property_outside_whitelist_is_kept(spark, planted_dir):
+    for test_object in (False, True):
+        clean = clean_triples(extract_triples(spark, planted_dir, test_object=test_object))
+        pairs = _iri_pairs(clean, OBO + "CL_0000001")
+        assert (EX_PART_OF, OBO + "CL_0000002") in pairs
+        # the whitelist still applies to class statements
+        assert not any(p.startswith("http://example.org/") and p != EX_PART_OF for p, _ in pairs)
+
+
+def test_owl_graph_flattens_restrictions_once(spark, owl_dir):
+    g = ontology_graph_from_owl(spark, owl_dir)
+    plan = g.clean_triples._jdf.queryExecution().analyzed().toString()
+    assert plan.count("collect_list(") == 1
+    g.unpersist()
+
+
+def test_triple_scans_name_the_malformed_file(spark, tmp_path):
+    from cell_kn_mvp_etl_ontologies_spark.sources.owl import scan_rdf_triples_split
+    from cell_kn_mvp_etl_ontologies_spark.sources.owl_datasource import (
+        OwlDataSourceReader,
+        register_owl_source,
+    )
+
+    d = tmp_path / "bad"
+    d.mkdir()
+    (d / "macrophage.owl").write_text(MACROPHAGE_OWL)
+    bad = d / "broken.owl"
+    bad.write_text("<rdf:RDF this is not xml")
+    register_owl_source(spark)
+    scans = {
+        "scan_rdf_triples": lambda: scan_rdf_triples(spark, str(d)).count(),
+        "scan_rdf_triples_split": lambda: scan_rdf_triples_split(spark, str(d)).count(),
+        "owl datasource": lambda: spark.read.format("owl").load(str(d)).count(),
+    }
+    for name, scan in scans.items():
+        with pytest.raises(Exception) as err:
+            scan()
+        assert str(bad) in str(err.value), name
+    with pytest.raises(ValueError, match="on_error"):
+        scan_rdf_triples(spark, str(d), on_error="Fail")
+    with pytest.raises(ValueError, match="on_error"):
+        scan_rdf_triples_split(spark, str(d), on_error="Fail")
+    with pytest.raises(ValueError, match="on_error"):
+        OwlDataSourceReader({"path": str(d), "on_error": "Fail"})
 
 
 # ---------------------------------------------------------------------------

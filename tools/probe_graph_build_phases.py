@@ -51,51 +51,22 @@ def main() -> None:
     bench.SF_DIR = SF_DIR
     bench.CPUS = CPUS
 
+    from pyspark.storagelevel import StorageLevel
+
     from cell_kn_mvp_etl_ontologies_spark.fixtures import fixture_ro_terms
-    from cell_kn_mvp_etl_ontologies_spark.plans import build_graph
     from cell_kn_mvp_etl_ontologies_spark.plans.graph_build import (
         build_edges,
         build_vertices,
         clean_triples,
         parse_uri_dim,
     )
-    from pyspark.sql import functions as F
-    from cell_kn_mvp_etl_ontologies_spark.fixtures import OBO, RDFS
-    from cell_kn_mvp_etl_ontologies_spark.io import load_table, parallelize
-    from pyspark.storagelevel import StorageLevel
-
-    def make_triples():
-        li = parallelize(load_table(spark, SF_DIR, "lineitem"))
-        subj = F.concat(
-            F.lit(OBO + "CL_"),
-            F.lpad((F.col("l_orderkey") % 100000).cast("string"), 7, "0"),
-        )
-        obj = F.concat(
-            F.lit(OBO + "GO_"),
-            F.lpad((F.col("l_partkey") % 50000).cast("string"), 7, "0"),
-        )
-        is_edge = (F.col("l_linenumber") % 3) != 0
-        return li.select(
-            F.lit("synthetic.owl").alias("src_file"),
-            subj.alias("subject"),
-            F.when(is_edge, F.lit(RDFS + "subClassOf"))
-            .otherwise(F.lit(RDFS + "label"))
-            .alias("predicate"),
-            F.when(is_edge, F.lit("iri")).otherwise(F.lit("literal")).alias("object_kind"),
-            F.when(is_edge, obj).alias("object_iri"),
-            F.when(~is_edge, F.concat(F.lit("label for "), subj)).alias("object_lexical"),
-            F.lit(None).cast("string").alias("object_lang"),
-            F.lit(None).cast("string").alias("object_datatype"),
-        )
 
     for r in range(args.runs):
         spark.catalog.clearCache()
         ro = fixture_ro_terms(spark)
-        triples = make_triples()
+        triples = bench.lineitem_triples(spark)
         t0 = time.perf_counter()
-        clean = clean_triples(triples, keep_src_file=False).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        clean = clean_triples(triples).persist(StorageLevel.MEMORY_AND_DISK)
         n_clean = clean.count()
         t1 = time.perf_counter()
         persisted: list = []
@@ -121,10 +92,10 @@ def main() -> None:
             import re
 
             final = edges._jdf.queryExecution().executedPlan().toString()
-            joins = re.findall(r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)\w* (\w+)", final)
+            joins = re.findall(r"\b(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)\b", final)
             from collections import Counter
 
-            print("edges executed-plan joins:", Counter(j[0] for j in joins))
+            print("edges executed-plan joins:", Counter(joins))
         clean.unpersist()
         for df in persisted:
             df.unpersist()
